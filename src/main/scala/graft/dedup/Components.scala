@@ -61,15 +61,18 @@ object Components {
     // no node changed — the loop exits at exactly the same round with
     // exactly the same labels.
     //
-    // The sum probe requires a NUMERIC id domain: a non-numeric comp
+    // The sum probe requires an INTEGRAL id domain: a non-numeric comp
     // (string doc ids are a legal idCol upstream) casts to NULL and
-    // every round's sum would read 0 — instant false convergence. For
-    // those, fall back to the r14 changed-row probe (one extra
-    // node-frame equi-join per round, correct on any orderable type).
+    // every round's sum would read 0 — instant false convergence — and
+    // a fractional decimal rounds in the DECIMAL(38,0) cast, so a round
+    // whose only change is 5.4 → 4.6 sums equal (both round to 5) and
+    // exits early. For those, fall back to the r14 changed-row probe
+    // (one extra node-frame equi-join per round, correct on any
+    // orderable type).
     val numericIds = labels.schema("comp").dataType match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _: org.apache.spark.sql.types.DecimalType => true
+      case d: org.apache.spark.sql.types.DecimalType => d.scale == 0
       case _ => false
     }
     def compSum(df: DataFrame): java.math.BigDecimal = Option(

@@ -20,15 +20,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
   *   _log/v<N>.manifest                  one line per data file (absolute)
   * }}}
   *
-  * Manifests may carry `#key=value` header lines before the file list:
-  *  - `#batch=<id>`   the stream batch a version was committed under
-  *                    ([[commitBatch]] replay idempotence);
-  *  - `#schema=<json>` the table schema AS OF that version (Spark
-  *    StructType json, single line). Readers plan with this schema, so a
-  *    version committed after a column add reads its OLDER files with
-  *    typed nulls in the new column — schema evolution is a property of
-  *    the format, not of parquet merge luck. Manifests without the
-  *    header (pre-schema logs) read schema-inferred as before.
+  * Manifests carry header lines before the file list: the version's
+  * table state — schema, column mapping, properties, CHECK constraints,
+  * deletion vector, partition layout, per-file stats, recorded change
+  * files and the stream batch / replay mark. [[Manifest]] is the one
+  * reader and writer of that grammar; every verb reads the manifest it
+  * builds on once per attempt. Readers plan with the recorded schema, so
+  * a version committed after a column add reads its OLDER files with
+  * typed nulls in the new column — schema evolution is a property of
+  * the format, not of parquet merge luck. Manifests without a schema
+  * (pre-schema logs) read schema-inferred as before.
   *
   * The COMMIT POINT is the manifest rename: data files are written first
   * (invisible — readers only open files a manifest names), the manifest

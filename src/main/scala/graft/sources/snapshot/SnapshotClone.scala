@@ -29,13 +29,14 @@ private[sources] trait SnapshotClone { this: SnapshotLog.type =>
     * branch. The clone's [[vacuum]] only sweeps the clone's own data
     * root — borrowed source files are structurally out of its reach.
     *
-    * Self-containment details: a `#dv=` deletion-vector sidecar resolves
+    * Self-containment details: a deletion-vector sidecar resolves
     * against a table's OWN `_log/dv/`, so the (O(deleted rows)-sized)
     * sidecar is COPIED — the one thing a clone must not borrow. The
-    * `#batch=` header rides along so a streaming sink resuming against
-    * the branch under the same checkpoint keeps replay idempotence
-    * instead of double-applying already-ingested batches. Schema and
-    * zone-map stats carry verbatim ([[restore]]'s header rule).
+    * batch id and the source's replay mark ride along so a streaming
+    * sink resuming against the branch under the same checkpoint keeps
+    * replay idempotence instead of double-applying already-ingested
+    * batches. Everything else the manifest records (schema, stats,
+    * checks, mapping, properties, layout) carries verbatim.
     *
     * THE documented hazard (same as Delta's): the SOURCE's vacuum does
     * not know about clones — if the source drops and vacuums the cloned
@@ -51,7 +52,8 @@ private[sources] trait SnapshotClone { this: SnapshotLog.type =>
       s"cannot clone version $v of $srcDir; have ${vs.mkString(",")}")
     require(versions(spark, dstDir).isEmpty,
       s"clone target $dstDir already holds a snapshot log")
-    dvOf(spark, srcDir, v).foreach { name =>
+    val m = manifest(spark, srcDir, v)
+    m.dv.foreach { name =>
       val sf = fs(spark, srcDir)
       val df = fs(spark, dstDir)
       df.mkdirs(new Path(logDir(dstDir), "dv"))
@@ -59,16 +61,9 @@ private[sources] trait SnapshotClone { this: SnapshotLog.type =>
         df, dvPath(dstDir, name), false,
         spark.sparkContext.hadoopConfiguration)
     }
-    val header = manifestLines(spark, srcDir, v).filter(l =>
-      l.startsWith("#schema=") || l.startsWith("#filestat=") ||
-        l.startsWith("#dv=") || l.startsWith("#batch=") ||
-        l.startsWith("#check=") ||
-        l.startsWith("#colmap=") || l.startsWith("#dropped=") ||
-        l.startsWith("#tblprop=") || // properties ARE table state
-        l.startsWith("#partition=") || l.startsWith("#filepart="))
-    commitFiles(spark, dstDir, filesOf(spark, srcDir, v),
-      java.util.UUID.randomUUID().toString,
-      header = header ++ watermarkHeader(spark, srcDir)).get
+    val srcMark = if (v == vs.last) m.mark else manifest(spark, srcDir, vs.last).mark
+    commitFiles(spark, dstDir, m.copy(changeFiles = None, watermark = srcMark),
+      java.util.UUID.randomUUID().toString).get
   }
 
   /** Break a clone's dependence on its source: rewrite every BORROWED
@@ -87,33 +82,22 @@ private[sources] trait SnapshotClone { this: SnapshotLog.type =>
     val f = fs(spark, dir)
     val ownRoot = f.makeQualified(new Path(dir, "data")).toString + "/"
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      requireNoDv(spark, dir, latest, "materialize")
-      val files = filesOf(spark, dir, latest)
-      val (own, borrowed) = files.partition(p =>
+      val (latest, m) = requireTip(spark, dir)
+      requireNoDv(dir, m, "materialize")
+      val (own, borrowed) = m.files.partition(p =>
         f.makeQualified(new Path(p)).toString.startsWith(ownRoot))
       if (borrowed.isEmpty) return latest
-      val schema = schemaOf(spark, dir, latest)
-      val base = readFiles(spark, dir, latest, borrowed)
+      val base = readFiles(spark, dir, m, borrowed)
       val commitId = java.util.UUID.randomUUID().toString
-      val fresh = writeData(spark, dir, base, commitId,
-        partitionColsOf(spark, dir, latest))
+      val fresh = writeData(spark, dir, m, base, commitId, m.partitionCols)
       // copying borrowed files changes ZERO logical rows — declare the
       // empty recorded change set so CDF feeds ride across it (the
       // optimize/applyDeletionVectors rule)
       val cdfMark =
-        if (cdfEnabled(spark, dir, latest,
-            requireNamesFree = false)) cdfHeaders(Seq.empty)
-        else Seq.empty
-      commitFiles(spark, dir, (own ++ fresh).sorted, commitId,
-        header = schema.map(schemaHeader).toSeq ++ cdfMark ++
-          propagatedStatHeaders(spark, dir, latest, own, fresh) ++
-          propagatedPartHeaders(spark, dir, latest, own, fresh) ++
-          checkHeaders(checksOf(spark, dir, latest)) ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+        if (cdfEnabled(dir, m, requireNamesFree = false)) Some(Seq.empty) else None
+      commitFiles(spark, dir,
+        withFiles(spark, m.next, own, fresh).copy(changeFiles = cdfMark),
+        commitId, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => () // raced — recompute against the new latest
       }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
   * exactly as it did inside the single object. */
 private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
 
-  /** Claim the next version for an explicit file list; returns the
+  /** Claim the next version for manifest `m`; returns the
     * version won, or None when `base` is given and the latest version is
     * no longer `base` (the body is stale — the caller must rebase and
     * retry). Protocol per attempt: (1) atomically create the version's
@@ -32,35 +32,11 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
     * the compare-and-swap that makes read-modify-write commits
     * (commitBatch/deleteWhere/optimize) lose-nothing under concurrency. */
   private[sources] def commitFiles(spark: SparkSession, dir: String,
-      files: Seq[String], commitId: String,
-      header: Seq[String] = Seq.empty,
+      m: Manifest, commitId: String,
       base: Option[Option[Long]] = None): Option[Long] = {
     val f = fs(spark, dir)
     f.mkdirs(logDir(dir))
-    // COLUMN-MAPPING CARRY: rename/drop state is table metadata every
-    // commit must keep alive, and this is the one choke point every
-    // verb goes through — auto-carry the latest version's #colmap= /
-    // #dropped= headers unless the caller set its own (renameColumn /
-    // dropColumn / restore do; an explicitly EMPTY header is how
-    // restore suppresses the carry). For base-checked verbs a raced
-    // carry is impossible (base mismatch aborts before manifesting).
-    // ONE listing + ONE read of the previous manifest serves both
-    // carries — this is the hot commit path, and each call is an
-    // object-store round trip
-    val metaCarry: Seq[String] = {
-      val hasMap = header.exists(l => l.startsWith("#colmap=") ||
-        l.startsWith("#dropped="))
-      val hasProp = header.exists(_.startsWith("#tblprop="))
-      if (hasMap && hasProp) Seq.empty
-      else versions(spark, dir).lastOption.toSeq.flatMap { prev =>
-        manifestLines(spark, dir, prev).filter(l =>
-          (!hasMap && (l.startsWith("#colmap=") ||
-            l.startsWith("#dropped="))) ||
-            (!hasProp && l.startsWith("#tblprop=")))
-      }
-    }
-    val body = (header ++ metaCarry ++ files)
-      .mkString("\n").getBytes("UTF-8")
+    val body = m.serialize
     var attempt = 0
     while (attempt < 1000) {
       attempt += 1
@@ -85,7 +61,7 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
           try store.publishAtomic(f, stage, manifestPath(dir, v), body)
           catch { case e: Throwable => f.delete(claim, false); throw e }
           f.delete(claim, false) // manifest is live; claim no longer needed
-          propagateBlooms(spark, dir, v, files)
+          propagateBlooms(spark, dir, v, m.files)
           return Some(v)
         }
       }
@@ -154,23 +130,20 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
       // concurrent addCheck must not be silently dropped from the new
       // latest (a metadata lost-update). Validation re-runs only when a
       // rebase actually changed the check set.
-      val latest = versions(spark, dir).lastOption
-      val checks = latest.map(checksOf(spark, dir, _)).getOrElse(Seq.empty)
+      val (latest, m) = tip(spark, dir)
       if (files == null) {
         // first attempt: validation rides the write (zero extra passes)
         val (wired, assertChecks) =
-          observedChecks(df, checks, commitId, s"commit into $dir")
-        files = writeData(spark, dir, wired, commitId)
+          observedChecks(df, m.checks, commitId, s"commit into $dir")
+        files = writeData(spark, dir, m, wired, commitId)
         assertChecks()
-        validated = Some(checks)
-      } else if (!validated.contains(checks)) {
+        validated = Some(m.checks)
+      } else if (!validated.contains(m.checks)) {
         // a rebase changed the check set: dedicated validation pass
-        requireChecksPass(checks, df, s"commit into $dir")
-        validated = Some(checks)
+        requireChecksPass(m.checks, df, s"commit into $dir")
+        validated = Some(m.checks)
       }
-      commitFiles(spark, dir, files, commitId,
-        header = Seq(schemaHeader(df.schema)) ++ checkHeaders(checks) ++
-          watermarkHeader(spark, dir),
+      commitFiles(spark, dir, m.next.replace(files, df.schema), commitId,
         base = Some(latest)) match {
         case Some(v) => return v
         case None    => () // raced — re-read the carried metadata
@@ -183,10 +156,11 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
     * through stream batch `batchId` (the new batch's files plus the
     * previous version's list by reference), stamped with a `#batch=`
     * header. Idempotent under foreachBatch's at-least-once replay: a
-    * batchId at or below the newest committed `#batch=` header ANYWHERE
-    * in the log (not just the latest version — a deleteWhere/optimize
-    * may have landed since) returns the current version untouched
-    * (Spark replays only from the last uncommitted batch, in order).
+    * batchId at or below the log's replay mark ([[lastBatch]] — the
+    * newest batch committed anywhere in the log, carried forward by a
+    * deleteWhere/optimize that landed since) returns the current version
+    * untouched (Spark replays only from the last uncommitted batch, in
+    * order).
     * Concurrency-safe: the previous version's file list is re-read and
     * the commit re-based whenever another committer lands first, so an
     * append racing a delete loses neither side's files. Gives a
@@ -214,55 +188,41 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
     var writtenPcs: Seq[String] = null // partition layout fresh was written in
     var validatedChecks: Option[Seq[(String, String)]] = None
     while (true) {
-      val vs = versions(spark, dir)
+      val (latest, m) = tip(spark, dir)
       batchId.foreach { b =>
-        if (lastBatch(spark, dir).exists(b <= _))
-          return vs.last // replayed batch: no-op (orphan data vacuumable)
+        if (m.mark.exists(b <= _))
+          return latest.get // replayed batch: no-op (orphan data vacuumable)
       }
-      val latest = vs.lastOption
-      val checks = latest.map(checksOf(spark, dir, _)).getOrElse(Seq.empty)
       // a partition-declared table's appends stay partition-pure — the
       // batch inherits the latest version's layout
-      val pcs = latest.map(partitionColsOf(spark, dir, _)).getOrElse(Seq.empty)
+      val pcs = m.partitionCols
       if (fresh == null) {
         val (wired, assertChecks) =
-          observedChecks(df, checks, commitId, s"$what into $dir")
-        fresh = writeData(spark, dir, wired, commitId, pcs)
+          observedChecks(df, m.checks, commitId, s"$what into $dir")
+        fresh = writeData(spark, dir, m, wired, commitId, pcs)
         writtenPcs = pcs
         assertChecks()
-        validatedChecks = Some(checks)
+        validatedChecks = Some(m.checks)
       } else {
         require(writtenPcs == pcs,
           s"partition layout of $dir changed concurrently (was " +
             s"${writtenPcs.mkString(",")}, now ${pcs.mkString(",")}) — " +
             "retry the batch")
-        if (!validatedChecks.contains(checks)) {
-          requireChecksPass(checks, df, s"$what into $dir")
-          validatedChecks = Some(checks)
+        if (!validatedChecks.contains(m.checks)) {
+          requireChecksPass(m.checks, df, s"$what into $dir")
+          validatedChecks = Some(m.checks)
         }
       }
-      val schema = latest.flatMap(schemaOf(spark, dir, _))
-        .map(mergeSchemas(_, df.schema)).getOrElse(df.schema)
-      val prev = latest.map(filesOf(spark, dir, _)).getOrElse(Seq.empty)
-      // a deletion vector on the previous version must ride along —
-      // dropping the header here would resurrect MoR-deleted rows
-      val dvHeader = latest.flatMap(dvOf(spark, dir, _))
-        .map(n => s"#dv=$n").toSeq
-      val partLines = latest.map(l => partHeaders(pcs,
-        filePartsOf(spark, dir, l), prev, fresh)).getOrElse(Seq.empty)
-      // a plain append (no batchId) is a non-batch verb like every
-      // other: it must carry the #lastbatch high-water mark forward, or
-      // a vacuum retaining only appends would blind the replay guard
-      // and a restarted sink's replayed epoch would re-apply
-      val replayHeader = batchId.map(b => s"#batch=$b").toSeq match {
-        case Seq() => watermarkHeader(spark, dir)
-        case bh    => bh
-      }
-      commitFiles(spark, dir, (prev ++ fresh).sorted, commitId,
-        header = replayHeader ++
-          Seq(schemaHeader(schema)) ++
-          dvHeader ++ partLines ++ checkHeaders(checks),
-        base = Some(latest)) match {
+      val schema = m.schema.map(mergeSchemas(_, df.schema)).getOrElse(df.schema)
+      // a plain append (no batchId) is a non-batch verb like every other:
+      // it carries the replay mark forward (Manifest.next), or a vacuum
+      // retaining only appends would blind the replay guard. The deletion
+      // vector rides along — dropping it would resurrect MoR-deleted rows
+      val nextM = batchId.map(m.nextBatch).getOrElse(m.next)
+      commitFiles(spark, dir, nextM.withSchema(schema).copy(
+          files = (m.files ++ fresh).sorted,
+          fileParts = m.fileParts ++ freshParts(pcs, fresh)),
+        commitId, base = Some(latest)) match {
         case Some(v) => return v
         case None    => () // lost the race — rebase on the new latest
       }
@@ -287,25 +247,21 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
     var files: Seq[String] = null
     var validated: Option[Seq[(String, String)]] = None
     while (true) {
-      val vs0 = versions(spark, dir)
-      if (lastBatch(spark, dir).exists(batchId <= _)) return vs0.last
+      val (latest, m) = tip(spark, dir)
+      if (m.mark.exists(batchId <= _)) return latest.get
       // base-checked for the same metadata-carry reason as [[commit]]
-      val checks = vs0.lastOption.map(checksOf(spark, dir, _))
-        .getOrElse(Seq.empty)
       if (files == null) {
         val (wired, assertChecks) =
-          observedChecks(df, checks, commitId, s"batch $batchId into $dir")
-        files = writeData(spark, dir, wired, commitId)
+          observedChecks(df, m.checks, commitId, s"batch $batchId into $dir")
+        files = writeData(spark, dir, m, wired, commitId)
         assertChecks()
-        validated = Some(checks)
-      } else if (!validated.contains(checks)) {
-        requireChecksPass(checks, df, s"batch $batchId into $dir")
-        validated = Some(checks)
+        validated = Some(m.checks)
+      } else if (!validated.contains(m.checks)) {
+        requireChecksPass(m.checks, df, s"batch $batchId into $dir")
+        validated = Some(m.checks)
       }
-      commitFiles(spark, dir, files, commitId,
-        header = Seq(s"#batch=$batchId", schemaHeader(df.schema)) ++
-          checkHeaders(checks),
-        base = Some(vs0.lastOption)) match {
+      commitFiles(spark, dir, m.nextBatch(batchId).replace(files, df.schema),
+        commitId, base = Some(latest)) match {
         case Some(v) => return v
         case None    => () // raced — re-read the carried metadata
       }
@@ -313,15 +269,15 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
     -1L // unreachable
   }
 
-  /** The committed version carrying stream batch `batchId`'s `#batch=`
-    * header, if retained — table-grain time travel by batch id. */
+  /** The committed version that ingested stream batch `batchId`, if
+    * retained — table-grain time travel by batch id. */
   def versionOfBatch(spark: SparkSession, dir: String,
       batchId: Long): Option[Long] =
     versions(spark, dir).reverseIterator
       .find(v => batchOf(spark, dir, v).contains(batchId))
 
   /** Commit an EXTERNALLY-MANAGED file set as the next version (replace
-    * semantics, `#batch=` replay idempotence, explicit schema). The
+    * semantics, batch-id replay idempotence, explicit schema). The
     * files are REFERENCED, not copied — the caller produced them (e.g. a
     * bucketed CDC merge generation) and owns their lifecycle; this turns
     * an existing directory-per-generation layout into atomic log
@@ -334,65 +290,43 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
       files: Seq[String], schema: StructType, batchId: Long,
       partitionCols: Seq[String] = Seq.empty): Long = {
     var validated: Option[Seq[(String, String)]] = None
+    // loud guard: a writer that percent-encoded multi-byte UTF-8 in a
+    // partition dir reads back MOJIBAKE under Spark's char-per-byte
+    // discovery — recording that tuple would make every equality probe
+    // on the real value silently miss. Refuse and tell the writer to lay
+    // out raw UTF-8 names (what Spark itself writes).
+    if (partitionCols.nonEmpty) files.foreach { p =>
+      p.split('/').dropRight(1).filter(_.contains('=')).foreach { seg =>
+        val v = seg.drop(seg.indexOf('=') + 1)
+        require(hiveUnescape(v) == hiveUnescapeUtf8(v),
+          s"external partition segment '$seg' in $p percent-encodes " +
+            "multi-byte UTF-8 — Spark partition discovery decodes " +
+            "escapes char-per-byte, so this value cannot round-trip; " +
+            "publish the layout with raw (unescaped) UTF-8 dir names")
+      }
+    }
     // externally-written hive-layout files: the caller declares the
     // partition columns and the tuples derive from the paths it laid
     // out — recorded in the manifest so readPartition prunes the
     // published table exactly like a commitPartitioned one
-    val partLines =
-      if (partitionCols.isEmpty) Seq.empty
-      else {
-        // loud guard: a writer that percent-encoded multi-byte UTF-8 in
-        // a partition dir reads back MOJIBAKE under Spark's
-        // char-per-byte discovery — recording that tuple would make
-        // every equality probe on the real value silently miss. Refuse
-        // and tell the writer to lay out raw UTF-8 names (what Spark
-        // itself writes).
-        files.foreach { p =>
-          p.split('/').dropRight(1).filter(_.contains('=')).foreach { seg =>
-            val v = seg.drop(seg.indexOf('=') + 1)
-            require(hiveUnescape(v) == hiveUnescapeUtf8(v),
-              s"external partition segment '$seg' in $p percent-encodes " +
-                "multi-byte UTF-8 — Spark partition discovery decodes " +
-                "escapes char-per-byte, so this value cannot round-trip; " +
-                "publish the layout with raw (unescaped) UTF-8 dir names")
-          }
-        }
-        partHeaders(partitionCols, Map.empty, Seq.empty, files)
-      }
+    val parts = freshParts(partitionCols, files)
     while (true) {
-      val vs0 = versions(spark, dir)
-      if (lastBatch(spark, dir).exists(batchId <= _)) return vs0.last
+      val (latest, m) = tip(spark, dir)
+      if (m.mark.exists(batchId <= _)) return latest.get
       // base-checked for the same metadata-carry reason as [[commit]]
-      val checks = vs0.lastOption.map(checksOf(spark, dir, _))
-        .getOrElse(Seq.empty)
-      if (checks.nonEmpty && files.nonEmpty && !validated.contains(checks)) {
+      if (m.checks.nonEmpty && files.nonEmpty && !validated.contains(m.checks)) {
         // partitioned external files: the partition values live in the
         // dirs — a flat explicit-schema read would validate NULLs there.
         // External files carry PHYSICAL names (the v2 streaming write
         // maps before encoding); alias back for the logical checks.
-        val cmX = vs0.lastOption.map(colmapOf(spark, dir, _))
-          .getOrElse(Map.empty[String, String])
-        val phys = physicalSchema(cmX, schema)
-        val raw =
-          if (partitionCols.isEmpty)
-            spark.read.schema(phys).parquet(files: _*)
-          else files.groupBy(commitRootOf).toSeq.sortBy(_._1)
-            .map { case (root, ps) =>
-              spark.read.schema(phys).option("basePath", root)
-                .parquet(ps: _*)
-            }.reduce(_.unionByName(_))
-        val frame =
-          if (cmX.isEmpty) raw
-          else raw.select(schema.fields.toSeq.map(f =>
-            col(s"`${cmX.getOrElse(f.name, f.name)}`").as(f.name)): _*)
-        requireChecksPass(checks, frame, s"external batch $batchId into $dir")
-        validated = Some(checks)
+        requireChecksPass(m.checks,
+          readBackWritten(spark, m, files, partitionCols, schema),
+          s"external batch $batchId into $dir")
+        validated = Some(m.checks)
       }
-      commitFiles(spark, dir, files.sorted,
-        java.util.UUID.randomUUID().toString,
-        header = Seq(s"#batch=$batchId", schemaHeader(schema)) ++
-          partLines ++ checkHeaders(checks),
-        base = Some(vs0.lastOption)) match {
+      commitFiles(spark, dir, m.nextBatch(batchId).replace(files.sorted, schema)
+          .copy(partitionCols = partitionCols, fileParts = parts),
+        java.util.UUID.randomUUID().toString, base = Some(latest)) match {
         case Some(v) => return v
         case None    => () // raced — re-read the carried metadata
       }
@@ -417,41 +351,26 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
       files: Seq[String], schema: StructType, batchId: Long): Long = {
     var validated: Option[Seq[(String, String)]] = None
     while (true) {
-      val vs = versions(spark, dir)
-      if (lastBatch(spark, dir).exists(batchId <= _)) return vs.last
-      val latest = vs.lastOption
-      val pcs = latest.map(partitionColsOf(spark, dir, _))
-        .getOrElse(Seq.empty)
+      val (latest, m) = tip(spark, dir)
+      if (m.mark.exists(batchId <= _)) return latest.get
+      val pcs = m.partitionCols
       require(pcs.isEmpty,
         s"$dir declares partition columns (${pcs.mkString(",")}); " +
           "external appends are flat — stream through " +
           "format(\"graft-snapshot\")'s v1 sink (commitBatch lays out " +
           "partition-pure files) instead")
-      val checks = latest.map(checksOf(spark, dir, _)).getOrElse(Seq.empty)
-      if (checks.nonEmpty && files.nonEmpty && !validated.contains(checks)) {
+      if (m.checks.nonEmpty && files.nonEmpty && !validated.contains(m.checks)) {
         // external files carry PHYSICAL names; alias back for checks
-        val cmX = latest.map(colmapOf(spark, dir, _))
-          .getOrElse(Map.empty[String, String])
-        val raw = spark.read.schema(physicalSchema(cmX, schema))
-          .parquet(files: _*)
-        val frame =
-          if (cmX.isEmpty) raw
-          else raw.select(schema.fields.toSeq.map(f =>
-            col(s"`${cmX.getOrElse(f.name, f.name)}`").as(f.name)): _*)
-        requireChecksPass(checks, frame,
+        requireChecksPass(m.checks,
+          readBackWritten(spark, m, files, Seq.empty, schema),
           s"external batch $batchId into $dir")
-        validated = Some(checks)
+        validated = Some(m.checks)
       }
-      val merged = latest.flatMap(schemaOf(spark, dir, _))
-        .map(mergeSchemas(_, schema)).getOrElse(schema)
-      val prev = latest.map(filesOf(spark, dir, _)).getOrElse(Seq.empty)
-      val dvHeader = latest.flatMap(dvOf(spark, dir, _))
-        .map(n => s"#dv=$n").toSeq
-      commitFiles(spark, dir, (prev ++ files).sorted,
-        java.util.UUID.randomUUID().toString,
-        header = Seq(s"#batch=$batchId", schemaHeader(merged)) ++
-          dvHeader ++ checkHeaders(checks),
-        base = Some(latest)) match {
+      val merged = m.schema.map(mergeSchemas(_, schema)).getOrElse(schema)
+      // the deletion vector rides along (Manifest.nextBatch carries it)
+      commitFiles(spark, dir, m.nextBatch(batchId).withSchema(merged)
+          .copy(files = (m.files ++ files).sorted),
+        java.util.UUID.randomUUID().toString, base = Some(latest)) match {
         case Some(v) => return v
         case None    => () // raced — re-read the carried metadata
       }
@@ -467,8 +386,7 @@ private[sources] trait SnapshotCommit { this: SnapshotLog.type =>
     * with guidance instead (the [[appendExternal]] precedent). */
   private[sources] def requireUnpartitionedForReplace(spark: SparkSession,
       dir: String, what: String): Unit = {
-    val pcs = versions(spark, dir).lastOption
-      .map(partitionColsOf(spark, dir, _)).getOrElse(Seq.empty)
+    val pcs = tip(spark, dir)._2.partitionCols
     require(pcs.isEmpty,
       s"$dir declares partition columns (${pcs.mkString(",")}); $what " +
         "replaces the table with a FLAT snapshot, which would silently " +

@@ -26,7 +26,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
     * instead of appending duplicates (what [[sink]] cannot express), and
     * rows where `deleteWhen` is true are tombstones. The streaming
     * MERGE shape of the Delta/Iceberg world: at-least-once replays
-    * no-op via `#batch=`, per-batch write cost is COW (∝ files holding
+    * no-op via the batch id, per-batch write cost is COW (∝ files holding
     * a changed key), and the first batch bootstraps the table. The
     * caller must guarantee one row per key per batch (aggregate or
     * dedup upstream) — merge's duplicate guard fails the batch loudly
@@ -75,24 +75,20 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
   def deleteWhere(spark: SparkSession, dir: String,
       pred: Column): Long = {
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val schema = schemaOf(spark, dir, latest)
-      val pcs = partitionColsOf(spark, dir, latest)
-      val current = filesOf(spark, dir, latest)
-      def readCur(paths: Seq[String]) = readFiles(spark, dir, latest, paths)
+      val (latest, m) = requireTip(spark, dir)
+      val current = m.files
+      def readCur(paths: Seq[String]) = readFiles(spark, dir, m, paths)
       // DV-composable: detection and the rewrite both read THROUGH the
       // version's deletion vector (readFiles), so a MoR-dead row can
       // neither mark a file affected nor resurrect in the rewrite; the
       // new version carries the vector minus the rewritten files'
-      // entries (prunedDvHeader). Detection pre-prunes at MANIFEST grain
+      // entries (prunedDv). Detection pre-prunes at MANIFEST grain
       // (zone maps/blooms/partition tuples) — files the stats prove
       // unaffected never open a footer.
-      val candidates = detectionCandidates(spark, dir, latest, pred)
+      val candidates = detectionCandidates(spark, dir, latest, m, pred)
       val affected =
         if (candidates.isEmpty) Set.empty[String]
-        else readFilesTagged(spark, dir, latest, candidates, Some("__f"))
+        else readFilesTagged(spark, dir, m, candidates, Some("__f"))
           .filter(pred).select("__f")
           .distinct().collect().map(_.getString(0)).toSet
       // scan metadata reports URIs; manifests may store schemeless paths
@@ -105,23 +101,17 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       val survivors = readCur(rewrite).filter(!coalesce(pred, lit(false)))
       val newFiles =
         if (survivors.isEmpty) Seq.empty
-        else writeData(spark, dir, survivors, commitId, pcs)
+        else writeData(spark, dir, m, survivors, commitId, m.partitionCols)
       // recorded change feed: the deleted pre-images ARE the commit's
       // exact row-level changes — write them as change files
       val cfiles =
-        if (!cdfEnabled(spark, dir, latest)) None
-        else Some(writeChangeFiles(spark, dir,
+        if (!cdfEnabled(dir, m)) None
+        else Some(writeChangeFiles(spark, dir, m,
           readCur(rewrite).filter(coalesce(pred, lit(false)))
             .withColumn("_change_type", lit("delete")), commitId))
-      commitFiles(spark, dir, (carry ++ newFiles).sorted, commitId,
-        header = schema.map(schemaHeader).toSeq ++
-          cfiles.map(cdfHeaders).getOrElse(Seq.empty) ++
-          prunedDvHeader(spark, dir, latest, rewrite) ++
-          propagatedStatHeaders(spark, dir, latest, carry, newFiles) ++
-          propagatedPartHeaders(spark, dir, latest, carry, newFiles) ++
-          checkHeaders(checksOf(spark, dir, latest)) ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+      commitFiles(spark, dir, withFiles(spark, m.next, carry, newFiles).copy(
+          dv = prunedDv(spark, dir, m, rewrite), changeFiles = cfiles),
+        commitId, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => // raced — recompute against the new latest; this
           // attempt's survivor rewrite is unreferenced, reclaim eagerly
@@ -153,14 +143,11 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
     var writtenPcs: Seq[String] = null
     var validated: Option[Seq[(String, String)]] = None
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val schema = schemaOf(spark, dir, latest)
-      val pcs = partitionColsOf(spark, dir, latest)
-      val current = filesOf(spark, dir, latest)
-      def readCur(paths: Seq[String]) = readFiles(spark, dir, latest, paths)
-      val checks = checksOf(spark, dir, latest)
+      val (latest, m) = requireTip(spark, dir)
+      val pcs = m.partitionCols
+      val current = m.files
+      def readCur(paths: Seq[String]) = readFiles(spark, dir, m, paths)
+      val checks = m.checks
       if (fresh == null) {
         val (wired, assertChecks) =
           observedChecks(df, checks, commitId, s"REPLACE WHERE into $dir")
@@ -176,7 +163,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
                 "REPLACE WHERE predicate must be evaluable on the " +
                   s"incoming rows: ${e.getMessage}")
           }
-        fresh = writeData(spark, dir, guarded, commitId, pcs)
+        fresh = writeData(spark, dir, m, guarded, commitId, pcs)
         writtenPcs = pcs
         assertChecks()
         val outside = Option(obs.get("__outside"))
@@ -198,10 +185,10 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       }
       // region rewrite — the deleteWhere recipe, same DV composition
       // and the same manifest-grain detection pre-prune
-      val candidates = detectionCandidates(spark, dir, latest, pred)
+      val candidates = detectionCandidates(spark, dir, latest, m, pred)
       val affected =
         if (candidates.isEmpty) Set.empty[String]
-        else readFilesTagged(spark, dir, latest, candidates, Some("__f"))
+        else readFilesTagged(spark, dir, m, candidates, Some("__f"))
           .filter(pred).select("__f")
           .distinct().collect().map(_.getString(0)).toSet
       def hit(p: String) = affected.contains(p) ||
@@ -220,10 +207,10 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
             // own commit dir: the fresh files already claimed
             // data/<commitId>, and a rebase retry re-rewrites anyway
             survivorId = java.util.UUID.randomUUID().toString
-            writeData(spark, dir, survivors, survivorId, pcs)
+            writeData(spark, dir, m, survivors, survivorId, pcs)
           }
         }
-      val merged = schema.map(mergeSchemas(_, df.schema))
+      val merged = m.schema.map(mergeSchemas(_, df.schema))
         .getOrElse(df.schema)
       // recorded change feed: the replaced region's pre-images are the
       // deletes; the incoming rows are the inserts — read BACK from the
@@ -232,7 +219,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       // one uuid per attempt, reclaimed on a lost race.
       val changeId = java.util.UUID.randomUUID().toString
       val cfiles =
-        if (!cdfEnabled(spark, dir, latest)) None
+        if (!cdfEnabled(dir, m)) None
         else {
           val legs = scala.collection.mutable.ArrayBuffer[DataFrame]()
           if (rewrite.nonEmpty)
@@ -242,23 +229,16 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           // an empty incoming frame (delete-the-region idiom) writes no
           // data files — and must not try to read them back
           if (fresh.nonEmpty)
-            legs += readBackWritten(spark, dir, latest, fresh,
+            legs += readBackWritten(spark, m, fresh,
               writtenPcs, merged).withColumn("_change_type", lit("insert"))
           Some(if (legs.isEmpty) Seq.empty
-          else writeChangeFiles(spark, dir,
+          else writeChangeFiles(spark, dir, m,
             legs.reduce(_.unionByName(_)), changeId))
         }
-      commitFiles(spark, dir, (carry ++ rewritten ++ fresh).sorted, commitId,
-        header = Seq(schemaHeader(merged)) ++
-          cfiles.map(cdfHeaders).getOrElse(Seq.empty) ++
-          prunedDvHeader(spark, dir, latest, rewrite) ++
-          propagatedStatHeaders(spark, dir, latest, carry,
-            rewritten ++ fresh) ++
-          propagatedPartHeaders(spark, dir, latest, carry,
-            rewritten ++ fresh) ++
-          checkHeaders(checks) ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+      commitFiles(spark, dir, withFiles(spark, m.next, carry, rewritten ++ fresh)
+          .withSchema(merged)
+          .copy(dv = prunedDv(spark, dir, m, rewrite), changeFiles = cfiles),
+        commitId, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => // raced — recompute against the new latest. The
           // fresh files are REUSED next attempt, but this attempt's
@@ -290,20 +270,17 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
     var writtenPcs: Seq[String] = null
     var validated: Option[Seq[(String, String)]] = None
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val schema = schemaOf(spark, dir, latest)
-      val pcs = partitionColsOf(spark, dir, latest)
+      val (latest, m) = requireTip(spark, dir)
+      val pcs = m.partitionCols
       require(pcs.nonEmpty,
         s"$dir declares no partition columns — dynamic partition " +
           "overwrite needs a declared layout (a plain INSERT OVERWRITE " +
           "replaces the whole table)")
-      val checks = checksOf(spark, dir, latest)
+      val checks = m.checks
       if (fresh == null) {
         val (wired, assertChecks) = observedChecks(df, checks, commitId,
           s"dynamic partition overwrite into $dir")
-        fresh = writeData(spark, dir, wired, commitId, pcs)
+        fresh = writeData(spark, dir, m, wired, commitId, pcs)
         writtenPcs = pcs
         assertChecks()
         validated = Some(checks)
@@ -319,8 +296,8 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
         }
       }
       val incoming = fresh.map(p => partTupleOfPath(p, pcs)).toSet
-      val parts = filePartsOf(spark, dir, latest)
-      val current = filesOf(spark, dir, latest)
+      val parts = m.fileParts
+      val current = m.files
       val unrecorded = current.filterNot(parts.contains)
       require(unrecorded.isEmpty,
         s"$dir has ${unrecorded.size} file(s) without recorded partition " +
@@ -329,7 +306,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           "re-publish the table via commitPartitioned first")
       val (dropped, carried) = current.partition(p =>
         incoming.contains(pcs.map(c => c -> parts(p)(c))))
-      val merged = schema.map(mergeSchemas(_, df.schema))
+      val merged = m.schema.map(mergeSchemas(_, df.schema))
         .getOrElse(df.schema)
       // recorded change feed: replaced partitions' rows (partition-pure
       // dropped files, DV-applied) are the deletes, the fresh files the
@@ -340,29 +317,24 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       // (never the table) when it is on.
       val changeId = java.util.UUID.randomUUID().toString
       val cfiles =
-        if (!cdfEnabled(spark, dir, latest)) None
+        if (!cdfEnabled(dir, m)) None
         else {
           val legs = scala.collection.mutable.ArrayBuffer[DataFrame]()
           if (dropped.nonEmpty)
-            legs += alignToRead(readFiles(spark, dir, latest, dropped),
+            legs += alignToRead(readFiles(spark, dir, m, dropped),
               merged).withColumn("_change_type", lit("delete"))
           if (fresh.nonEmpty)
-            legs += readBackWritten(spark, dir, latest, fresh,
+            legs += readBackWritten(spark, m, fresh,
               writtenPcs, merged)
               .withColumn("_change_type", lit("insert"))
           Some(if (legs.isEmpty) Seq.empty
-          else writeChangeFiles(spark, dir,
+          else writeChangeFiles(spark, dir, m,
             legs.reduce(_.unionByName(_)), changeId))
         }
-      commitFiles(spark, dir, (carried ++ fresh).sorted, commitId,
-        header = Seq(schemaHeader(merged)) ++
-          cfiles.map(cdfHeaders).getOrElse(Seq.empty) ++
-          prunedDvHeader(spark, dir, latest, dropped) ++
-          propagatedStatHeaders(spark, dir, latest, carried, fresh) ++
-          propagatedPartHeaders(spark, dir, latest, carried, fresh) ++
-          checkHeaders(checks) ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+      commitFiles(spark, dir, withFiles(spark, m.next, carried, fresh)
+          .withSchema(merged)
+          .copy(dv = prunedDv(spark, dir, m, dropped), changeFiles = cfiles),
+        commitId, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => // raced — recompute against the new latest; the
           // fresh files are reused, this attempt's change dir is not
@@ -391,14 +363,10 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       set: Map[String, Column]): Long = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val schema = schemaOf(spark, dir, latest)
-      val pcs = partitionColsOf(spark, dir, latest)
-      val current = filesOf(spark, dir, latest)
-      def readCur(paths: Seq[String]) = readFiles(spark, dir, latest, paths)
-      val tableSchema = schema.getOrElse(readCur(current).schema)
+      val (latest, m) = requireTip(spark, dir)
+      val current = m.files
+      def readCur(paths: Seq[String]) = readFiles(spark, dir, m, paths)
+      val tableSchema = m.schema.getOrElse(readCur(current).schema)
       val unknown = set.keySet.diff(tableSchema.fieldNames.toSet)
       require(unknown.isEmpty,
         s"UPDATE sets unknown column(s) ${unknown.mkString(",")} — " +
@@ -406,10 +374,10 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       // DV-composable (the deleteWhere rule): detection + rewrite read
       // through the vector; the commit prunes rewritten files' entries.
       // Manifest-grain pre-prune like deleteWhere's.
-      val candidates = detectionCandidates(spark, dir, latest, pred)
+      val candidates = detectionCandidates(spark, dir, latest, m, pred)
       val affected =
         if (candidates.isEmpty) Set.empty[String]
-        else readFilesTagged(spark, dir, latest, candidates, Some("__f"))
+        else readFilesTagged(spark, dir, m, candidates, Some("__f"))
           .filter(pred).select("__f")
           .distinct().collect().map(_.getString(0)).toSet
       def hitF(p: String) = affected.contains(p) ||
@@ -436,29 +404,22 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           set.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
             .getOrElse(col(fld.name))
         }: _*)
-      requireChecksPass(checksOf(spark, dir, latest),
-        matchedPost, s"UPDATE post-images in $dir")
+      requireChecksPass(m.checks, matchedPost, s"UPDATE post-images in $dir")
       val commitId = java.util.UUID.randomUUID().toString
-      val newFiles = writeData(spark, dir, rewritten, commitId, pcs)
+      val newFiles = writeData(spark, dir, m, rewritten, commitId, m.partitionCols)
       // recorded change feed: matched pre-images + their post-images
       // (both frames the verb already has — checks validate matchedPost)
       val cfiles =
-        if (!cdfEnabled(spark, dir, latest)) None
-        else Some(writeChangeFiles(spark, dir,
+        if (!cdfEnabled(dir, m)) None
+        else Some(writeChangeFiles(spark, dir, m,
           readCur(rewrite).filter(hit)
             .withColumn("_change_type", lit("update_preimage"))
             .unionByName(matchedPost
               .withColumn("_change_type", lit("update_postimage"))),
           commitId))
-      commitFiles(spark, dir, (carry ++ newFiles).sorted, commitId,
-        header = schema.map(schemaHeader).toSeq ++
-          cfiles.map(cdfHeaders).getOrElse(Seq.empty) ++
-          prunedDvHeader(spark, dir, latest, rewrite) ++
-          propagatedStatHeaders(spark, dir, latest, carry, newFiles) ++
-          propagatedPartHeaders(spark, dir, latest, carry, newFiles) ++
-          checkHeaders(checksOf(spark, dir, latest)) ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+      commitFiles(spark, dir, withFiles(spark, m.next, carry, newFiles).copy(
+          dv = prunedDv(spark, dir, m, rewrite), changeFiles = cfiles),
+        commitId, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => // raced — recompute against the new latest;
           // this attempt's rewrite files are unreferenced, reclaim
@@ -519,25 +480,22 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       keys: Seq[String], deleteWhen: Option[Column] = None,
       dropCols: Seq[String] = Seq.empty,
       insertOnlyWhen: Option[Column] = None): Long =
-    mergeImpl(spark, dir, changes, keys, deleteWhen, dropCols, Seq.empty,
+    mergeImpl(spark, dir, changes, keys, deleteWhen, dropCols, None,
       insertOnlyWhen)
 
-  /** [[merge]] stamped with a `#batch=` header — the replay-idempotent
-    * form for at-least-once stream feeds ([[commitBatch]] semantics): a
-    * batch at or below the newest committed `#batch=` anywhere in the
-    * log returns the current version untouched. This is the CDC
+  /** [[merge]] stamped with stream batch `batchId` — the replay-
+    * idempotent form for at-least-once stream feeds ([[commitBatch]]
+    * semantics): a batch at or below the log's replay mark
+    * ([[lastBatch]]) returns the current version untouched. This is the CDC
     * apply-changes sink for a snapshot-logged table: each micro-batch
     * of keyed upserts/tombstones merges in at file grain. */
   def mergeBatch(spark: SparkSession, dir: String, changes: DataFrame,
       keys: Seq[String], batchId: Long,
       deleteWhen: Option[Column] = None,
       dropCols: Seq[String] = Seq.empty,
-      insertOnlyWhen: Option[Column] = None): Long = {
-    val vs = versions(spark, dir)
-    if (lastBatch(spark, dir).exists(batchId <= _)) return vs.last
+      insertOnlyWhen: Option[Column] = None): Long =
     mergeImpl(spark, dir, changes, keys, deleteWhen, dropCols,
-      Seq(s"#batch=$batchId"), insertOnlyWhen)
-  }
+      Some(batchId), insertOnlyWhen)
 
   /** Project `df` onto `schema`: present columns cast-free, absent ones
     * as typed nulls (how pre-evolution rows acquire an added column). */
@@ -608,7 +566,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
 
   private[sources] def mergeImpl(spark: SparkSession, dir: String,
       changes0: DataFrame, keys: Seq[String], deleteWhen: Option[Column],
-      dropCols: Seq[String], extraHeader: Seq[String],
+      dropCols: Seq[String], batchId: Option[Long],
       insertOnlyWhen: Option[Column] = None): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
     val isDelete = deleteWhen.map(c => coalesce(c, lit(false)))
@@ -632,20 +590,24 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       // - duplicates: ambiguity needs a key two rows could both MATCH —
       //   NULL-keyed inserts match nothing, so they are excluded (SQL
       //   inserts both).
-      val violations = changes.groupBy(keys.map(col): _*)
-        .agg(
-          count(when(anyKeyNull && (!col("__ins") || col("__del")), 1))
-            .as("nullbad"),
-          count(when(!anyKeyNull, 1)).as("nk"))
-        .agg(sum(col("nullbad")).as("nullbad"), max(col("nk")).as("maxnk"))
-        .head
-      require(violations.isNullAt(0) || violations.getLong(0) == 0,
-        s"merge changes carry a NULL key in (${keys.mkString(",")}) — " +
-          "NULL matches nothing under SQL equality; only rows marked by " +
-          "insertOnlyWhen (SQL's NOT MATCHED INSERT leg) may carry one")
-      require(violations.isNullAt(1) || violations.getLong(1) <= 1,
-        "merge changes carry duplicate keys — ambiguous merge " +
-          "(collapse the batch to one winning row per key first)")
+      // Lazy: first forced after the replay guard, so a replayed batch
+      // stays a job-free no-op.
+      lazy val validated: Unit = {
+        val violations = changes.groupBy(keys.map(col): _*)
+          .agg(
+            count(when(anyKeyNull && (!col("__ins") || col("__del")), 1))
+              .as("nullbad"),
+            count(when(!anyKeyNull, 1)).as("nk"))
+          .agg(sum(col("nullbad")).as("nullbad"), max(col("nk")).as("maxnk"))
+          .head
+        require(violations.isNullAt(0) || violations.getLong(0) == 0,
+          s"merge changes carry a NULL key in (${keys.mkString(",")}) — " +
+            "NULL matches nothing under SQL equality; only rows marked by " +
+            "insertOnlyWhen (SQL's NOT MATCHED INSERT leg) may carry one")
+        require(violations.isNullAt(1) || violations.getLong(1) <= 1,
+          "merge changes carry duplicate keys — ambiguous merge " +
+            "(collapse the batch to one winning row per key first)")
+      }
       val upserts = changes.filter(!col("__del")).drop("__del", "__ins")
       // detection/survivor key set: NULL-keyed rows match nothing and
       // must not reach the stat prune's literal encoding
@@ -664,34 +626,35 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           .collect().map(_.get(0)))
       def sparseOn(k: String): Boolean = valsOf(k).length <= 100000
       while (true) {
-        val vs = versions(spark, dir)
+        val (tipV, m) = tip(spark, dir)
+        // a replayed batch is a no-op — checked once per attempt against
+        // the manifest this attempt builds on
+        batchId.foreach(b => if (m.mark.exists(b <= _)) return tipV.get)
+        validated
+        val nextM = batchId.map(m.nextBatch).getOrElse(m.next)
         // incoming post-images must honor the table's checks (tombstones
         // remove rows — nothing to validate on them)
-        vs.lastOption.foreach { latest =>
-          requireChecksPass(checksOf(spark, dir, latest), upserts,
-            s"merge into $dir")
-        }
-        if (vs.isEmpty) {
+        if (tipV.nonEmpty)
+          requireChecksPass(m.checks, upserts, s"merge into $dir")
+        if (tipV.isEmpty) {
           // bootstrap: merging into an empty table is just the inserts.
           // 0 = "still no committed version" (deletes against nothing).
           if (upserts.isEmpty) return 0L
           val commitId = java.util.UUID.randomUUID().toString
-          commitFiles(spark, dir, writeData(spark, dir, upserts, commitId),
-            commitId,
-            header = (extraHeader :+ schemaHeader(upserts.schema)) ++
-              watermarkHeader(spark, dir),
-            base = Some(None)) match {
+          commitFiles(spark, dir, nextM.replace(
+              writeData(spark, dir, m, upserts, commitId), upserts.schema),
+            commitId, base = Some(None)) match {
             case Some(v) => return v
             case None    => // raced a concurrent first commit — remerge;
               // the bootstrap write is recomputed next attempt
               dropOrphanedCommitDir(spark, dir, commitId)
           }
         } else {
-          val latest = vs.last
-          val tableSchema = schemaOf(spark, dir, latest)
-          val pcs = partitionColsOf(spark, dir, latest)
-          val current = filesOf(spark, dir, latest)
-          def readCur(paths: Seq[String]) = readFiles(spark, dir, latest, paths)
+          val latest = tipV.get
+          val tableSchema = m.schema
+          val pcs = m.partitionCols
+          val current = m.files
+          def readCur(paths: Seq[String]) = readFiles(spark, dir, m, paths)
           // ONE key-column-pruned scan finds the files that hold any
           // matched key; everything else is carried by reference. Fast
           // path: a SPARSE single-integer-key batch against a table with
@@ -710,13 +673,13 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           // Null-partition entries are omitted (conservative keep; a
           // change key is never NULL here — the guard above).
           val stats = {
-            val recorded = fileStatsLogicalOf(spark, dir, latest)
+            val recorded = m.logicalStats
             if (pcs.isEmpty) recorded
             else {
               val dts = tableSchema.map(s =>
                 pcs.flatMap(c => s.find(_.name == c).map(c -> _.dataType))
                   .toMap).getOrElse(Map.empty)
-              val parts = filePartsOf(spark, dir, latest).map { case (p, t) =>
+              val parts = m.fileParts.map { case (p, t) =>
                 p -> t.flatMap { case (c, raw) =>
                   if (raw == NullPartition) None
                   else dts.get(c).flatMap(decodePartValue(raw, _)).map {
@@ -780,7 +743,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           // version's deletion vector, so a MoR-dead row cannot mark
           // its file affected (its key is invisible — correctly so)
           def readTagged(paths: Seq[String]) =
-            readFilesTagged(spark, dir, latest, paths, Some("__f"))
+            readFilesTagged(spark, dir, m, paths, Some("__f"))
           val affected = fastPath match {
             case Some((candidates, ks)) =>
               val k = statKey.get
@@ -818,14 +781,14 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           val commitId = java.util.UUID.randomUUID().toString
           val newFiles =
             if (body.isEmpty) Seq.empty
-            else writeData(spark, dir, body, commitId, pcs)
+            else writeData(spark, dir, m, body, commitId, pcs)
           // recorded change feed — the verb knows its exact changes:
           // matched target rows are pre-images ("delete" when the change
           // row tombstones, else "update_preimage"), upserts whose key
           // exists in the rewritten files are post-images, the rest are
           // inserts (NULL-keyed insert-only rows match nothing → insert)
           val cfiles =
-            if (!cdfEnabled(spark, dir, latest)) None
+            if (!cdfEnabled(dir, m)) None
             else {
               require(!outSchema.fieldNames.contains("_change_type") &&
                 !outSchema.fieldNames.contains("__del"),
@@ -855,18 +818,13 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
                 legs += tag(alignTo(upserts, outSchema)
                   .withColumn("_change_type", lit("insert")))
               }
-              Some(writeChangeFiles(spark, dir,
+              Some(writeChangeFiles(spark, dir, m,
                 legs.reduce(_.unionByName(_)), commitId))
             }
-          commitFiles(spark, dir, (carry ++ newFiles).sorted, commitId,
-            header = extraHeader ++ Seq(schemaHeader(outSchema)) ++
-              cfiles.map(cdfHeaders).getOrElse(Seq.empty) ++
-              prunedDvHeader(spark, dir, latest, rewrite) ++
-              propagatedStatHeaders(spark, dir, latest, carry, newFiles) ++
-              propagatedPartHeaders(spark, dir, latest, carry, newFiles) ++
-              checkHeaders(checksOf(spark, dir, latest)) ++
-              watermarkHeader(spark, dir),
-            base = Some(Some(latest))) match {
+          commitFiles(spark, dir,
+            withFiles(spark, nextM, carry, newFiles).withSchema(outSchema)
+              .copy(dv = prunedDv(spark, dir, m, rewrite), changeFiles = cfiles),
+            commitId, base = Some(Some(latest))) match {
             case Some(v) => return v
             case None    => // lost the race — recompute against new
               // latest; this attempt's body files are unreferenced
@@ -900,8 +858,8 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
     * commit, full rebase on a lost race. Prior versions keep referencing
     * the replaced small files until [[vacuum]] reclaims them — compaction
     * never breaks time travel. Rows are bit-identical (a pure rewrite);
-    * no `#batch=` header is stamped, and the replay guard scans the whole
-    * log, so compacting a streamed table never un-guards replays.
+    * no batch id is stamped, and the replay mark carries forward, so
+    * compacting a streamed table never un-guards replays.
     *
     * `partitionScope` narrows the candidate set to files whose RECORDED
     * manifest tuple equals the given values — the daily-maintenance
@@ -919,12 +877,9 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
     require(targetFiles >= 1, "targetFiles must be >= 1")
     val f = fs(spark, dir)
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val schema = schemaOf(spark, dir, latest)
-      val pcs = partitionColsOf(spark, dir, latest)
-      val current = filesOf(spark, dir, latest)
+      val (latest, m) = requireTip(spark, dir)
+      val pcs = m.partitionCols
+      val current = m.files
       val inScope: String => Boolean =
         if (partitionScope.isEmpty) _ => true
         else {
@@ -933,8 +888,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
               s"(partition cols: ${pcs.mkString(",")})"))
           val rendered = partitionScope.map { case (c, v) =>
             c -> renderPartValue(v) }
-          val tuples = filePartsOf(spark, dir, latest)
-          p => tuples.get(p).exists(t =>
+          p => m.fileParts.get(p).exists(t =>
             rendered.forall { case (c, r) => t.get(c).contains(r) })
         }
       val (small, large) = current.partition(p =>
@@ -943,7 +897,7 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
       // DV-composable: the compaction reads through the vector, so a
       // MoR-dead row is physically absent from the rewrite; the commit
       // carries the vector minus the compacted files' entries
-      val base = readFiles(spark, dir, latest, small)
+      val base = readFiles(spark, dir, m, small)
       // On a hive-partitioned table the writer fans each TASK out across
       // every partition tuple it holds — repartition(targetFiles) would
       // emit up to targetFiles × |touched tuples| files, INCREASING the
@@ -987,22 +941,15 @@ private[sources] trait SnapshotDml { this: SnapshotLog.type =>
           .repartitionByRange(targetFiles, (pcs ++ clusterBy).map(col): _*)
           .sortWithinPartitions((pcs ++ clusterBy).map(col): _*)
       val commitId = java.util.UUID.randomUUID().toString
-      val fresh = writeData(spark, dir, clustered, commitId, pcs)
+      val fresh = writeData(spark, dir, m, clustered, commitId, pcs)
       // compaction changes ZERO logical rows: with the change feed on,
       // declare that (an EMPTY recorded change set) so CDF streams ride
       // across it instead of refusing the file rewrite
       val cdfMark =
-        if (cdfEnabled(spark, dir, latest,
-            requireNamesFree = false)) cdfHeaders(Seq.empty)
-        else Seq.empty
-      commitFiles(spark, dir, (large ++ fresh).sorted, commitId,
-        header = schema.map(schemaHeader).toSeq ++ cdfMark ++
-          prunedDvHeader(spark, dir, latest, small) ++
-          propagatedStatHeaders(spark, dir, latest, large, fresh) ++
-          propagatedPartHeaders(spark, dir, latest, large, fresh) ++
-          checkHeaders(checksOf(spark, dir, latest)) ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+        if (cdfEnabled(dir, m, requireNamesFree = false)) Some(Seq.empty) else None
+      commitFiles(spark, dir, withFiles(spark, m.next, large, fresh).copy(
+          dv = prunedDv(spark, dir, m, small), changeFiles = cdfMark),
+        commitId, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => () // raced — rebase (rewrite is vacuumable orphan)
       }

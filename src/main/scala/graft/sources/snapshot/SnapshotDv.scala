@@ -14,14 +14,12 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
   // Merge-on-read DELETION VECTORS — O(matches) deletes, no file rewrite
   // -------------------------------------------------------------------
 
-  /** The DV sidecar a version references, if any (`#dv=<name>` header;
-    * sidecars live under `_log/dv/` with version-independent uuid names
-    * so the claim protocol never needs to know its version number before
-    * writing). */
+  /** The DV sidecar a version references, if any (sidecars live under
+    * `_log/dv/` with version-independent uuid names so the claim protocol
+    * never needs to know its version number before writing). */
   private[sources] def dvOf(spark: SparkSession, dir: String,
       v: Long): Option[String] =
-    manifestLines(spark, dir, v)
-      .collectFirst { case l if l.startsWith("#dv=") => l.stripPrefix("#dv=") }
+    manifest(spark, dir, v).dv
 
   private[sources] def dvPath(dir: String, name: String) =
     new Path(logDir(dir), s"dv/$name")
@@ -132,27 +130,27 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
       .write.mode("overwrite").parquet(dvPath(dir, name).toString)
   }
 
-  /** Read `paths` under version `v`'s schema with that version's
-    * deletion vector applied (if any) — THE single read primitive
+  /** Read `paths` under manifest `m`'s schema with its deletion vector
+    * applied (if any) — THE single read primitive
     * [[read]]/[[readBetween]]/[[readPoint]] share, so no read path can
     * resurrect deleted rows. The DV anti-join keys on the scan's own
     * `_metadata` (file_path, row_index) — deletes are sparse by
     * construction, so AQE broadcasts the DV side. */
-  private[sources] def readFiles(spark: SparkSession, dir: String, v: Long,
+  private[sources] def readFiles(spark: SparkSession, dir: String, m: Manifest,
       paths: Seq[String]): DataFrame =
-    readFilesTagged(spark, dir, v, paths, None)
+    readFilesTagged(spark, dir, m, paths, None)
 
   /** [[readFiles]] optionally tagging each row with its source file
     * path (`tag` column, from the scan's own `_metadata` — captured AT
     * SCAN level, so it survives the DV anti-join where
     * `input_file_name()` would not if the join shuffled). The affected-
     * file detection of every rewrite verb uses the tag. */
-  /** Scan `paths` under version `v`'s schema (partition columns
+  /** Scan `paths` under manifest `m`'s schema (partition columns
     * re-attached on hive layouts) with `extras` metadata-derived
     * columns — each `(name, _metadata field)` attaches AT SCAN level,
     * before any union/select hides the hidden `_metadata` struct. The
     * raw physical view: NO deletion vector applied. */
-  private[sources] def scanWithMeta(spark: SparkSession, dir: String, v: Long,
+  private[sources] def scanWithMeta(spark: SparkSession, dir: String, m: Manifest,
       paths: Seq[String], extras: Seq[(String, String)]): DataFrame = {
     def attach(df: DataFrame): DataFrame =
       extras.foldLeft(df) { case (d, (n, m)) => d.withColumn(n, col(m)) }
@@ -160,22 +158,21 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
     // aliases back to the version's LOGICAL names (identity — and
     // alias-free — on never-renamed tables). Partition columns cannot
     // be renamed, so hive dir names and manifest tuples stay literal.
-    val cm = colmapOf(spark, dir, v)
+    val cm = m.colmap
     def relogical(df: DataFrame, s: StructType): DataFrame =
       if (cm.isEmpty) df
       else df.select(s.fields.toSeq.map(f =>
         col(s"`${cm.getOrElse(f.name, f.name)}`").as(f.name)) ++
         extras.map(e => col(s"`${e._1}`")): _*)
-    val pcs = partitionColsOf(spark, dir, v)
-    if (pcs.nonEmpty) {
+    if (m.partitionCols.nonEmpty) {
       // hive-partitioned files carry the partition values in their DIR
       // names, not in the parquet: re-attach them via basePath-scoped
       // reads, grouped per commit dir (one group per contributing
       // commit — bounded by history, not by files). The version schema
       // types the partition columns; the final select restores its
       // column order.
-      val s = schemaOf(spark, dir, v).getOrElse(throw new IllegalStateException(
-        s"partitioned version $v of $dir lacks a #schema header"))
+      val s = m.schema.getOrElse(throw new IllegalStateException(
+        s"a partitioned version of $dir records no schema"))
       val phys = physicalSchema(cm, s)
       val raw = paths.groupBy(commitRootOf).toSeq.sortBy(_._1)
         .map { case (root, ps) =>
@@ -186,23 +183,23 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
       if (cm.isEmpty)
         raw.select((s.fieldNames.toSeq ++ extras.map(_._1)).map(col): _*)
       else relogical(raw, s)
-    } else schemaOf(spark, dir, v) match {
+    } else m.schema match {
       case Some(s) => relogical(attach(
         spark.read.schema(physicalSchema(cm, s)).parquet(paths: _*)), s)
       case None    => attach(spark.read.parquet(paths: _*))
     }
   }
 
-  private[sources] def readFilesTagged(spark: SparkSession, dir: String, v: Long,
+  private[sources] def readFilesTagged(spark: SparkSession, dir: String, m: Manifest,
       paths: Seq[String], tag: Option[String]): DataFrame = {
-    val dvName = dvOf(spark, dir, v)
+    val dvName = m.dv
     val extras: Seq[(String, String)] =
       tag.map(_ -> "_metadata.file_path").toSeq ++
         (if (dvName.isDefined)
           Seq("__dv_f" -> "_metadata.file_path",
             "__dv_i" -> "_metadata.row_index")
         else Seq.empty)
-    val base = scanWithMeta(spark, dir, v, paths, extras)
+    val base = scanWithMeta(spark, dir, m, paths, extras)
     dvName match {
       case None => base
       case Some(name) =>
@@ -214,37 +211,34 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
     }
   }
 
-  /** The `#dv=` header for a commit that REWROTE `rewritten` files of
-    * version `v`: the old vector minus every entry naming a rewritten
+  /** The deletion vector for a commit that REWROTE `rewritten` files of
+    * manifest `m`: the old vector minus every entry naming a rewritten
     * file (those rows are gone physically — the rewrite read through
     * the DV, so survivors never resurrect). Entries for CARRIED files
     * stay live in a fresh uuid sidecar (the old one still serves older
-    * versions until vacuumed); an emptied vector drops the header
-    * entirely. Distinct DV paths are bounded by the table's file
-    * count — the collect is metadata-sized. */
-  private[sources] def prunedDvHeader(spark: SparkSession, dir: String, v: Long,
-      rewritten: Seq[String]): Seq[String] =
-    dvOf(spark, dir, v) match {
-      case None => Seq.empty
-      case Some(name) =>
-        // path-grain surgery — works on either sidecar shape verbatim,
-        // no bitmap expansion
-        val dv = dvRaw(spark, dir, name)
-        val gone = rewritten.map(p => new Path(p).toUri.getPath).toSet
-        val dropPaths = dv.select("path").distinct().collect()
-          .map(_.getString(0))
-          .filter(p => gone.contains(new Path(p).toUri.getPath))
-        val remaining =
-          if (dropPaths.isEmpty) dv
-          else dv.filter(!col("path").isin(dropPaths.toSeq: _*))
-        if (remaining.isEmpty) Seq.empty
-        else if (dropPaths.isEmpty) Seq(s"#dv=$name") // untouched: share it
-        else {
-          val newName = java.util.UUID.randomUUID().toString
-          remaining.coalesce(1).write
-            .parquet(dvPath(dir, newName).toString)
-          Seq(s"#dv=$newName")
-        }
+    * versions until vacuumed); an emptied vector is dropped entirely.
+    * Distinct DV paths are bounded by the table's file count — the
+    * collect is metadata-sized. */
+  private[sources] def prunedDv(spark: SparkSession, dir: String, m: Manifest,
+      rewritten: Seq[String]): Option[String] =
+    m.dv.flatMap { name =>
+      // path-grain surgery — works on either sidecar shape verbatim,
+      // no bitmap expansion
+      val dv = dvRaw(spark, dir, name)
+      val gone = rewritten.map(p => new Path(p).toUri.getPath).toSet
+      val dropPaths = dv.select("path").distinct().collect()
+        .map(_.getString(0))
+        .filter(p => gone.contains(new Path(p).toUri.getPath))
+      val remaining =
+        if (dropPaths.isEmpty) dv
+        else dv.filter(!col("path").isin(dropPaths.toSeq: _*))
+      if (remaining.isEmpty) None
+      else if (dropPaths.isEmpty) Some(name) // untouched: share it
+      else {
+        val newName = java.util.UUID.randomUUID().toString
+        remaining.coalesce(1).write.parquet(dvPath(dir, newName).toString)
+        Some(newName)
+      }
     }
 
   /** The basePath partition discovery needs for a hive-layout file:
@@ -260,9 +254,9 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
     segs.take(end).mkString("/")
   }
 
-  private[sources] def requireNoDv(spark: SparkSession, dir: String, v: Long,
+  private[sources] def requireNoDv(dir: String, m: Manifest,
       verb: String): Unit =
-    require(dvOf(spark, dir, v).isEmpty,
+    require(m.dv.isEmpty,
       s"$verb cannot run on a version carrying a deletion vector — " +
         "rewriting files while a DV references their row positions would " +
         s"resurrect deleted rows; run applyDeletionVectors($dir) first")
@@ -287,28 +281,24 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
     * [[optimize]]) read THROUGH the vector (detection and rewrite — a
     * MoR-dead row can neither mark a file affected nor resurrect) and
     * commit the vector MINUS the rewritten files' entries in a fresh
-    * sidecar ([[prunedDvHeader]]; the old sidecar keeps serving older
-    * versions until vacuumed, an emptied vector drops the header).
+    * sidecar ([[prunedDv]]; the old sidecar keeps serving older
+    * versions until vacuumed, an emptied vector is dropped).
     * Only [[materialize]] still refuses — run [[applyDeletionVectors]]
     * before severing a clone. Consecutive MoR deletes accumulate (new
     * sidecar = old ∪ new matches). */
   def deleteWhereMoR(spark: SparkSession, dir: String,
       pred: Column): Long = {
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val current = filesOf(spark, dir, latest)
+      val (latest, m) = requireTip(spark, dir)
       // matches are located on the DV-APPLIED view: a row already dead
       // in the current vector must not be re-matched (harmless but
       // inflates the sidecar); metadata rides the same scan — and the
       // scan re-attaches partition values, so a predicate on a
       // partition column matches real values, never schema-read NULLs
-      val withMeta = scanWithMeta(spark, dir, latest, current,
+      val withMeta = scanWithMeta(spark, dir, m, m.files,
         Seq("__dv_f" -> "_metadata.file_path",
           "__dv_i" -> "_metadata.row_index"))
-      val priorDv = dvOf(spark, dir, latest)
-      val alive = priorDv match {
+      val alive = m.dv match {
         case None => withMeta
         case Some(name) =>
           val dv = dvPositions(spark, dir, name)
@@ -318,7 +308,7 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
       val newMatches = alive.filter(coalesce(pred, lit(false)))
         .select(col("__dv_f").as("path"), col("__dv_i").as("row_index"))
       if (newMatches.isEmpty) return latest
-      val cumulative = priorDv match {
+      val cumulative = m.dv match {
         case None => newMatches
         case Some(name) => dvPositions(spark, dir, name)
           .unionByName(newMatches)
@@ -330,20 +320,13 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
       // stream must otherwise refuse)
       val changeId = java.util.UUID.randomUUID().toString
       val cfiles =
-        if (!cdfEnabled(spark, dir, latest)) None
-        else Some(writeChangeFiles(spark, dir,
+        if (!cdfEnabled(dir, m)) None
+        else Some(writeChangeFiles(spark, dir, m,
           alive.filter(coalesce(pred, lit(false)))
             .drop("__dv_f", "__dv_i")
             .withColumn("_change_type", lit("delete")), changeId))
-      val header = Seq(s"#dv=$dvName") ++
-        cfiles.map(cdfHeaders).getOrElse(Seq.empty) ++
-        schemaOf(spark, dir, latest).map(schemaHeader).toSeq ++
-        manifestLines(spark, dir, latest).filter(l =>
-          l.startsWith("#filestat=") || l.startsWith("#check=") ||
-            l.startsWith("#partition=") || l.startsWith("#filepart=")) ++
-        watermarkHeader(spark, dir)
-      commitFiles(spark, dir, current, dvName, header = header,
-        base = Some(Some(latest))) match {
+      commitFiles(spark, dir, m.next.copy(dv = Some(dvName), changeFiles = cfiles),
+        dvName, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => // raced — recompute (orphan sidecar vacuumable)
           if (cfiles.isDefined) dropOrphanedChangeDir(spark, dir, changeId)
@@ -359,36 +342,25 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
     * the new version (or the current one when no DV exists). */
   def applyDeletionVectors(spark: SparkSession, dir: String): Long = {
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val name = dvOf(spark, dir, latest).getOrElse(return latest)
+      val (latest, m) = requireTip(spark, dir)
+      val name = m.dv.getOrElse(return latest)
       val dv = dvRaw(spark, dir, name) // path-grain: either shape
       val dead = dv.select("path").distinct()
         .collect().map(r => new Path(r.getString(0)).toUri.getPath).toSet
-      val current = filesOf(spark, dir, latest)
-      val (rewrite, carry) = current.partition(p =>
+      val (rewrite, carry) = m.files.partition(p =>
         dead.contains(new Path(p).toUri.getPath))
       val commitId = java.util.UUID.randomUUID().toString
-      val survivors = readFiles(spark, dir, latest, rewrite)
+      val survivors = readFiles(spark, dir, m, rewrite)
       val newFiles =
         if (survivors.isEmpty) Seq.empty
-        else writeData(spark, dir, survivors, commitId,
-          partitionColsOf(spark, dir, latest))
+        else writeData(spark, dir, m, survivors, commitId, m.partitionCols)
       // physically dropping already-tombstoned rows changes ZERO
       // logical rows — declare the empty change set for CDF streams
       val cdfMark =
-        if (cdfEnabled(spark, dir, latest,
-            requireNamesFree = false)) cdfHeaders(Seq.empty)
-        else Seq.empty
-      commitFiles(spark, dir, (carry ++ newFiles).sorted, commitId,
-        header = schemaOf(spark, dir, latest).map(schemaHeader).toSeq ++
-          cdfMark ++
-          propagatedStatHeaders(spark, dir, latest, carry, newFiles) ++
-          propagatedPartHeaders(spark, dir, latest, carry, newFiles) ++
-          checkHeaders(checksOf(spark, dir, latest)) ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+        if (cdfEnabled(dir, m, requireNamesFree = false)) Some(Seq.empty) else None
+      commitFiles(spark, dir, withFiles(spark, m.next, carry, newFiles)
+          .copy(dv = None, changeFiles = cdfMark),
+        commitId, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => () // raced — recompute
       }
@@ -433,13 +405,10 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
   def history(spark: SparkSession, dir: String): DataFrame = {
     val f = fs(spark, dir)
     val rows = versions(spark, dir).map { v =>
-      val batch = batchOf(spark, dir, v)
-      val nFiles = filesOf(spark, dir, v).size.toLong
-      val nCols = schemaOf(spark, dir, v).map(_.fields.length.toLong)
+      val m = manifest(spark, dir, v)
       val mtime = f.getFileStatus(manifestPath(dir, v)).getModificationTime
-      (v, batch, nFiles, nCols, dvOf(spark, dir, v).isDefined,
-        checksOf(spark, dir, v).size.toLong,
-        lastBatchHeaderOf(spark, dir, v).orElse(batch),
+      (v, m.batch, m.files.size.toLong, m.schema.map(_.fields.length.toLong),
+        m.dv.isDefined, m.checks.size.toLong, m.mark,
         new java.sql.Timestamp(mtime))
     }
     import spark.implicits._
@@ -460,14 +429,11 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
     * runs only where the report says it pays. */
   def compactionReport(spark: SparkSession, dir: String,
       smallFileBytes: Long = 128L * 1024 * 1024): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot under $dir")
-    val latest = vs.last
+    val m = requireTip(spark, dir)._2
     val f = fs(spark, dir)
-    val pcs = partitionColsOf(spark, dir, latest)
-    val parts = if (pcs.nonEmpty) filePartsOf(spark, dir, latest)
-      else Map.empty[String, Map[String, String]]
-    val byPart = filesOf(spark, dir, latest)
+    val pcs = m.partitionCols
+    val parts = m.fileParts
+    val byPart = m.files
       .map { p =>
         val key =
           if (pcs.isEmpty) ""

@@ -15,27 +15,11 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
   // -------------------------------------------------------------------
 
   /** CHECK constraints of a version, in declaration order: (name, SQL
-    * expression). Recorded as `#check=<name>=<expr>` manifest headers,
-    * carried by every commit verb like the schema — a constraint is
-    * table state, not a side register. */
+    * expression), carried by every commit verb like the schema — a
+    * constraint is table state, not a side register. */
   def checksOf(spark: SparkSession, dir: String,
       v: Long): Seq[(String, String)] =
-    manifestLines(spark, dir, v).collect {
-      case l if l.startsWith("#check=") =>
-        val body = l.stripPrefix("#check=")
-        val i = body.indexOf('=')
-        (body.take(i), body.drop(i + 1))
-    }
-
-  private[sources] def checkHeaders(checks: Seq[(String, String)]): Seq[String] =
-    checks.map { case (n, s) => s"#check=$n=$s" }
-
-  /** The latest version's checks — what an incoming commit must honor
-    * (empty for a fresh table). */
-  private[sources] def carriedChecks(spark: SparkSession,
-      dir: String): Seq[(String, String)] =
-    versions(spark, dir).lastOption
-      .map(checksOf(spark, dir, _)).getOrElse(Seq.empty)
+    manifest(spark, dir, v).checks
 
   /** Enforce `checks` on `df` — ONE fused aggregation over the commit's
     * rows (the [[graft.Expectations]] cost rule: never a pass per
@@ -204,20 +188,14 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
     // creation path), so later recording verbs never meet the clash
     val reservedNew = (addCols.map(_.name) ++ renameCols.map(_._2))
       .filter(CdfReservedNames.contains)
-    if (reservedNew.nonEmpty)
-      versions(spark, dir).lastOption.foreach { latest =>
-        require(!cdfEnabled(spark, dir, latest, requireNamesFree = false),
-          s"$dir: the recorded change feed reserves column name(s) " +
-            s"${reservedNew.mkString(", ")} — pick another name or keep " +
-            s"$ChangeFeedProperty off")
-      }
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val schema = schemaOf(spark, dir, latest).getOrElse(
-        read(spark, dir, Some(latest)).schema)
-      val existing = checksOf(spark, dir, latest)
+      val (latest, m) = requireTip(spark, dir)
+      require(reservedNew.isEmpty || !cdfEnabled(dir, m, requireNamesFree = false),
+        s"$dir: the recorded change feed reserves column name(s) " +
+          s"${reservedNew.mkString(", ")} — pick another name or keep " +
+          s"$ChangeFeedProperty off")
+      val schema = m.schema.getOrElse(readAt(spark, dir, latest, m).schema)
+      val existing = m.checks
       dropChecks.foreach { n =>
         require(existing.exists(_._1 == n),
           s"no check named '$n' on $dir " +
@@ -227,7 +205,7 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
 
       // ---- RENAME / DROP COLUMN: metadata-only, against the column
       // mapping (statement order: renames, then drops, then adds) ----
-      val pcsA = partitionColsOf(spark, dir, latest)
+      val pcsA = m.partitionCols
       // columns the SURVIVING checks reference (dropped-in-this-
       // statement checks release their columns); unparseable check SQL
       // refuses conservatively
@@ -241,8 +219,8 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
         }
       }.toSet
       var schema2 = schema
-      var cm2 = colmapOf(spark, dir, latest)
-      var burned2 = droppedOf(spark, dir, latest)
+      var cm2 = m.colmap
+      var burned2 = m.dropped
       renameCols.foreach { case (from, to) =>
         require(schema2.fieldNames.contains(from),
           s"no column '$from' on $dir")
@@ -347,9 +325,9 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
       // Validation sees the POST-statement view: renames applied (so a
       // check on a just-renamed column reads its real data, never a
       // NULL backfill), added columns as typed NULLs.
-      if (addChecks.nonEmpty && filesOf(spark, dir, latest).nonEmpty) {
+      if (addChecks.nonEmpty && m.files.nonEmpty) {
         val renameTo = renameCols.toMap
-        val renamed = read(spark, dir, Some(latest)).select(
+        val renamed = readAt(spark, dir, latest, m).select(
           schema.fields.toSeq.map(f =>
             col(s"`${f.name}`").as(renameTo.getOrElse(f.name, f.name))): _*)
         // READ-semantics fill: a CHECK declared alongside an
@@ -360,15 +338,9 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
           alignToRead(renamed.drop(dropCols: _*), widened),
           s"existing data of $dir")
       }
-      val carried = manifestLines(spark, dir, latest).filter(l =>
-        l.startsWith("#filestat=") || l.startsWith("#dv=") ||
-          l.startsWith("#partition=") || l.startsWith("#filepart="))
-      commitFiles(spark, dir, filesOf(spark, dir, latest),
+      commitFiles(spark, dir, m.next.withSchema(widened).copy(colmap = cm2,
+          dropped = burned2, checks = kept ++ addChecks),
         java.util.UUID.randomUUID().toString,
-        header = Seq(schemaHeader(widened)) ++ carried ++
-          colmapHeaders(cm2, burned2) ++
-          checkHeaders(kept ++ addChecks) ++
-          watermarkHeader(spark, dir),
         base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => () // raced — revalidate against the new latest
@@ -378,8 +350,8 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
   }
 
   /** `ALTER TABLE ... RENAME COLUMN from TO to` as ONE metadata-only
-    * commit: the logical name changes in the `#schema=` header, the
-    * PHYSICAL name stays (recorded in `#colmap=`), so zero data moves —
+    * commit: the logical name changes in the schema, the PHYSICAL name
+    * stays (recorded in the column mapping), so zero data moves —
     * old versions time-travel under their own names, stats/DV/layout
     * carry verbatim. Refused for partition columns (hive dir names are
     * literal), CHECK-referenced columns (the constraint SQL stores the
@@ -391,9 +363,9 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
       renameCols = Seq(from -> to))
 
   /** `ALTER TABLE ... DROP COLUMN` as ONE metadata-only commit: the
-    * column leaves the `#schema=` header; its bytes stay in old files
-    * (invisible — reads project by schema), so its PHYSICAL name is
-    * BURNED into `#dropped=` forever and can never be re-used (loud
+    * column leaves the schema; its bytes stay in old files (invisible —
+    * reads project by schema), so its PHYSICAL name is BURNED into the
+    * manifest's dropped set forever and can never be re-used (loud
     * refusal where Delta would mint a fresh mapping id). Old versions
     * still show the column via time travel. Refused for partition and
     * CHECK-referenced columns, and for the last column. */
@@ -421,22 +393,13 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
     require(!sqlExpr.contains('\n'),
       "check expression must be a single line")
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val existing = checksOf(spark, dir, latest)
-      require(!existing.exists(_._1 == name),
+      val (latest, m) = requireTip(spark, dir)
+      require(!m.checks.exists(_._1 == name),
         s"check '$name' already exists on $dir")
       requireChecksPass(Seq((name, sqlExpr)),
-        read(spark, dir, Some(latest)), s"existing data of $dir")
-      val carried = manifestLines(spark, dir, latest).filter(l =>
-        l.startsWith("#schema=") || l.startsWith("#filestat=") ||
-          l.startsWith("#dv=") || l.startsWith("#partition=") ||
-          l.startsWith("#filepart="))
-      commitFiles(spark, dir, filesOf(spark, dir, latest),
+        readAt(spark, dir, latest, m), s"existing data of $dir")
+      commitFiles(spark, dir, m.next.copy(checks = m.checks :+ (name -> sqlExpr)),
         java.util.UUID.randomUUID().toString,
-        header = carried ++ checkHeaders(existing :+ (name -> sqlExpr)) ++
-          watermarkHeader(spark, dir),
         base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => () // raced — revalidate against the new latest
@@ -449,22 +412,12 @@ private[sources] trait SnapshotEvolve { this: SnapshotLog.type =>
     * an unknown name (dropping a constraint you don't have is a bug). */
   def dropCheck(spark: SparkSession, dir: String, name: String): Long = {
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val existing = checksOf(spark, dir, latest)
-      require(existing.exists(_._1 == name),
+      val (latest, m) = requireTip(spark, dir)
+      require(m.checks.exists(_._1 == name),
         s"no check named '$name' on $dir " +
-          s"(have ${existing.map(_._1).mkString(",")})")
-      val carried = manifestLines(spark, dir, latest).filter(l =>
-        l.startsWith("#schema=") || l.startsWith("#filestat=") ||
-          l.startsWith("#dv=") || l.startsWith("#partition=") ||
-          l.startsWith("#filepart="))
-      commitFiles(spark, dir, filesOf(spark, dir, latest),
+          s"(have ${m.checks.map(_._1).mkString(",")})")
+      commitFiles(spark, dir, m.next.copy(checks = m.checks.filterNot(_._1 == name)),
         java.util.UUID.randomUUID().toString,
-        header = carried ++
-          checkHeaders(existing.filterNot(_._1 == name)) ++
-          watermarkHeader(spark, dir),
         base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => ()

@@ -17,18 +17,31 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
     * typed nulls in the new column. Fails loudly on a vacuumed/unknown
     * version rather than returning a partial table. */
   def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
+    val (v, m) = versionAt(spark, dir, version)
+    readAt(spark, dir, v, m)
+  }
+
+  /** A retained version (default: the latest) and its manifest — loud on
+    * an empty log or a vacuumed/unknown version. */
+  private[sources] def versionAt(spark: SparkSession, dir: String,
+      version: Option[Long]): (Long, Manifest) = {
     val vs = versions(spark, dir)
     require(vs.nonEmpty, s"no committed snapshot under $dir")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v),
       s"version $v of $dir does not exist (have ${vs.mkString(",")})")
-    val files = filesOf(spark, dir, v)
-    require(files.nonEmpty,
+    (v, manifest(spark, dir, v))
+  }
+
+  /** [[read]] of version `v` whose manifest `m` is already in hand. */
+  private[sources] def readAt(spark: SparkSession, dir: String, v: Long,
+      m: Manifest): DataFrame = {
+    require(m.files.nonEmpty,
       s"version $v of $dir is an empty table (every row was deleted)")
     val f = fs(spark, dir)
-    files.foreach(p => require(f.exists(new Path(p)),
+    m.files.foreach(p => require(f.exists(new Path(p)),
       s"manifest v$v names a vacuumed file: $p — version retained but data gone"))
-    readFiles(spark, dir, v, files)
+    readFiles(spark, dir, m, m.files)
   }
 
   /** The batch-scan substitution [[graft.plans.SnapshotBatchRead]]
@@ -48,8 +61,8 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
       val v = version.getOrElse(vs.last)
       if (!vs.contains(v)) None
       else {
-        val files = filesOf(spark, dir, v)
-        if (files.isEmpty) None else Some(readFiles(spark, dir, v, files))
+        val m = manifest(spark, dir, v)
+        if (m.files.isEmpty) None else Some(readFiles(spark, dir, m, m.files))
       }
     }
   }
@@ -96,40 +109,40 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
     require(vs.contains(fromV) && vs.contains(toV),
       s"changesBetween needs both versions retained; have ${vs.mkString(",")}")
     require(fromV <= toV, s"fromV $fromV must not exceed toV $toV")
-    val outSchema = schemaOf(spark, dir, toV)
-      .orElse(schemaOf(spark, dir, fromV))
+    val mFrom = manifest(spark, dir, fromV)
+    val mTo = if (toV == fromV) mFrom else manifest(spark, dir, toV)
+    val outSchema = mTo.schema.orElse(mFrom.schema)
     // a column RENAMED inside the span keeps its physical name — route
     // each side's logical names through it into toV's, or alignTo would
     // treat the renamed column as absent and null it out of the feed
-    val cmTo = colmapOf(spark, dir, toV)
+    val cmTo = mTo.colmap
     val physToTo = cmTo.map(_.swap)
-    def toEndNames(v: Long, df: DataFrame): DataFrame = {
-      val cmV = colmapOf(spark, dir, v)
+    def toEndNames(m: Manifest, df: DataFrame): DataFrame = {
+      val cmV = m.colmap
       if (cmV == cmTo) df
       else df.select(df.columns.toSeq.map { c =>
         val phys = cmV.getOrElse(c, c)
         col(s"`$c`").as(physToTo.getOrElse(phys, phys))
       }: _*)
     }
-    def readSide(v: Long, paths: Seq[String]): DataFrame = {
+    def readSide(v: Long, m: Manifest, paths: Seq[String]): DataFrame = {
       val raw =
         if (paths.isEmpty) {
-          val s = schemaOf(spark, dir, v)
-            .getOrElse(read(spark, dir, Some(v)).schema)
+          val s = m.schema.getOrElse(readAt(spark, dir, v, m).schema)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        } else readFiles(spark, dir, v, paths) // applies v's deletion vector
-      val named = toEndNames(v, raw)
+        } else readFiles(spark, dir, m, paths) // applies m's deletion vector
+      val named = toEndNames(m, raw)
       // READ fill: a column added after v reads its frozen default here
       // exactly as the toV table scan would (never NULL-vs-default skew)
       outSchema.map(alignToRead(named, _)).getOrElse(named)
     }
-    val before = filesOf(spark, dir, fromV)
-    val after = filesOf(spark, dir, toV)
+    val before = mFrom.files
+    val after = mTo.files
     val added = after.filterNot(before.contains(_))
     val removed = before.filterNot(after.contains(_))
-    val addedRows = readSide(toV, added)
-    val removedRows = readSide(fromV, removed)
+    val addedRows = readSide(toV, mTo, added)
+    val removedRows = readSide(fromV, mFrom, removed)
     // survivor cancellation only matters when a commit both added AND
     // removed files (a COW rewrite); pure appends and pure drops —
     // streaming's common case — are one scan of the changed files with
@@ -144,8 +157,8 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
     // file diff (removed files read DV-applied cancel against the
     // rewritten survivors).
     val dvDeletes: Option[DataFrame] = {
-      val toDvName = dvOf(spark, dir, toV)
-      val fromDvName = dvOf(spark, dir, fromV)
+      val toDvName = mTo.dv
+      val fromDvName = mFrom.dv
       if (toDvName.isEmpty || toDvName == fromDvName) None
       else {
         val toDv = dvPositions(spark, dir, toDvName.get)
@@ -164,8 +177,8 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
         else {
           // files carry PHYSICAL names; alias straight to toV's logical
           // (the feed's output names), same translation as readSide
-          val cmF = colmapOf(spark, dir, fromV)
-          val raw = schemaOf(spark, dir, fromV) match {
+          val cmF = mFrom.colmap
+          val raw = mFrom.schema match {
             case Some(s0) => spark.read
               .schema(physicalSchema(cmF, s0)).parquet(paths: _*)
             case None     => spark.read.parquet(paths: _*)
@@ -506,9 +519,13 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
     require(vs.contains(fromV) && vs.contains(toV),
       s"changeFeed needs both versions retained; have ${vs.mkString(",")}")
     val vset = vs.toSet
-    val outSchema = schemaOf(spark, dir, toV)
-      .getOrElse(read(spark, dir, Some(toV)).schema)
-    val cmTo = colmapOf(spark, dir, toV)
+    // each version's manifest is read once; version v-1's is reused as
+    // v's predecessor
+    val ms = scala.collection.mutable.HashMap.empty[Long, Manifest]
+    def mOf(v: Long): Manifest = ms.getOrElseUpdate(v, manifest(spark, dir, v))
+    val mTo = mOf(toV)
+    val outSchema = mTo.schema.getOrElse(readAt(spark, dir, toV, mTo).schema)
+    val cmTo = mTo.colmap
     val physToTo = cmTo.map(_.swap)
     // outSchema + the three feed columns, read-filled (defaults, not
     // NULL). _commit_timestamp = the version's commit point (manifest
@@ -528,11 +545,12 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
       require(vset.contains(v),
         s"version $v of $dir is gone (vacuumed?) — its changes cannot " +
           s"be served; narrow the span (have ${vs.mkString(",")})")
-      changeFilesOf(spark, dir, v) match {
+      val m = mOf(v)
+      m.changeFiles match {
         case Some(cfs) if cfs.isEmpty => None // recorded zero changes
         case Some(cfs) =>
-          val cmV = colmapOf(spark, dir, v)
-          val sV = schemaOf(spark, dir, v).getOrElse(outSchema)
+          val cmV = m.colmap
+          val sV = m.schema.getOrElse(outSchema)
           val physChange = StructType(physicalSchema(cmV, sV).fields :+
             StructField("_change_type",
               org.apache.spark.sql.types.StringType))
@@ -544,10 +562,10 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
           } :+ col("_change_type"): _*)
           Some(shape(logical, v))
         case None =>
-          val files = filesOf(spark, dir, v)
+          val files = m.files
           def norm(p: String): String = new Path(p).toUri.getPath
           val prev: Seq[String] =
-            if (vset.contains(v - 1)) filesOf(spark, dir, v - 1)
+            if (vset.contains(v - 1)) mOf(v - 1).files
             // versions are claimed densely from 1, so ONLY v1 is the
             // table's genuine first version — an oldest-RETAINED v>1
             // after a prefix vacuum must refuse, or its accumulated
@@ -563,16 +581,15 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
             s"version $v of $dir rewrote files without recording its " +
               s"changes — set TBLPROPERTIES ('$ChangeFeedProperty'=" +
               "'true') so rewrite verbs record them")
-          require(dvOf(spark, dir, v) ==
-            (if (vset.contains(v - 1)) dvOf(spark, dir, v - 1) else None),
+          require(m.dv == (if (vset.contains(v - 1)) mOf(v - 1).dv else None),
             s"version $v of $dir grew its deletion vector without " +
               s"recording its changes — set TBLPROPERTIES " +
               s"('$ChangeFeedProperty'='true')")
           val added = files.filterNot(p => prevSet.contains(norm(p)))
           if (added.isEmpty) None
           else {
-            val raw = readFiles(spark, dir, v, added)
-            val cmV = colmapOf(spark, dir, v)
+            val raw = readFiles(spark, dir, m, added)
+            val cmV = m.colmap
             val named =
               if (cmV == cmTo) raw
               else raw.select(raw.columns.toSeq.map { c =>
@@ -641,8 +658,8 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
     vs.find(v => commitTimeMillis(spark, dir, v) >= fromTsMillis) match {
       case Some(from) if from <= to => changeFeed(spark, dir, from, to)
       case _ => // no commit inside the window: empty, same shape
-        val base = schemaOf(spark, dir, to)
-          .getOrElse(read(spark, dir, Some(to)).schema)
+        val mTo = manifest(spark, dir, to)
+        val base = mTo.schema.getOrElse(readAt(spark, dir, to, mTo).schema)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(base.fields :+

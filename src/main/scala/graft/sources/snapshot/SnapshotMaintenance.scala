@@ -41,14 +41,11 @@ private[sources] trait SnapshotMaintenance { this: SnapshotLog.type =>
       bloomCols: Seq[String], expectedItems: Long = 100000L,
       fpp: Double = 0.01): Long = {
     require(bloomCols.nonEmpty, "analyzeBlooms needs at least one column")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot under $dir")
-    val latest = vs.last
-    val files = filesOf(spark, dir, latest)
+    val (latest, m) = requireTip(spark, dir)
     // files carry PHYSICAL names; alias the probed columns back so the
     // sidecar records LOGICAL names (what readPoint/readFilter probe by)
-    val cmB = colmapOf(spark, dir, latest)
-    val raw = spark.read.parquet(files: _*)
+    val cmB = m.colmap
+    val raw = spark.read.parquet(m.files: _*)
     val df =
       if (cmB.isEmpty) raw
       else raw.select(bloomCols.map(c =>
@@ -170,11 +167,10 @@ private[sources] trait SnapshotMaintenance { this: SnapshotLog.type =>
     val cutoff = System.currentTimeMillis() - minAgeMs
     val (drop, young) = drop0.partition(v =>
       f.getFileStatus(manifestPath(dir, v)).getModificationTime <= cutoff)
-    val keep = young ++ keep0
-    val droppedRefs = drop.flatMap(filesOf(spark, dir, _)).toSet
-    val droppedChangeRefs = drop
-      .flatMap(v => changeFilesOf(spark, dir, v).getOrElse(Seq.empty))
-      .toSet
+    val keep = (young ++ keep0).map(manifest(spark, dir, _))
+    val dropM = drop.map(manifest(spark, dir, _))
+    val droppedRefs = dropM.flatMap(_.files).toSet
+    val droppedChangeRefs = dropM.flatMap(_.changeFiles.getOrElse(Nil)).toSet
     val out = Seq.newBuilder[(String, String, Long)]
     def len(p: Path): Long =
       try f.getFileStatus(p).getLen catch { case _: Throwable => 0L }
@@ -187,13 +183,13 @@ private[sources] trait SnapshotMaintenance { this: SnapshotLog.type =>
     }
     val dvRoot = new Path(logDir(dir), "dv")
     if (f.exists(dvRoot)) {
-      val referenced = keep.flatMap(dvOf(spark, dir, _)).toSet
+      val referenced = keep.flatMap(_.dv).toSet
       f.listStatus(dvRoot).foreach { st =>
         if (!referenced(st.getPath.getName))
           out += (("dv_sidecar", st.getPath.toString, st.getLen))
       }
     }
-    val live = keep.flatMap(filesOf(spark, dir, _)).toSet
+    val live = keep.flatMap(_.files).toSet
     val now = System.currentTimeMillis()
     val dataRoot = new Path(dir, "data")
     if (f.exists(dataRoot)) f.listStatus(dataRoot).foreach { d =>
@@ -210,9 +206,7 @@ private[sources] trait SnapshotMaintenance { this: SnapshotLog.type =>
     }
     val changesRoot = new Path(dir, "changes")
     if (f.exists(changesRoot)) {
-      val liveChanges = keep
-        .flatMap(v => changeFilesOf(spark, dir, v).getOrElse(Seq.empty))
-        .toSet
+      val liveChanges = keep.flatMap(_.changeFiles.getOrElse(Nil)).toSet
       f.listStatus(changesRoot).foreach { d =>
         f.listStatus(d.getPath).toSeq.filter(_.isFile).foreach { s =>
           val p = s.getPath.toString
@@ -253,16 +247,14 @@ private[sources] trait SnapshotMaintenance { this: SnapshotLog.type =>
     val cutoff = System.currentTimeMillis() - minAgeMs
     val (drop, young) = drop0.partition(v =>
       f.getFileStatus(manifestPath(dir, v)).getModificationTime <= cutoff)
-    val keep = young ++ keep0
+    val keep = (young ++ keep0).map(manifest(spark, dir, _))
     // capture dropped manifests' references BEFORE deleting them: these
     // files are known-dead (their last referencing version is going away)
-    // and exempt from the orphan grace period
-    val droppedRefs = drop.flatMap(filesOf(spark, dir, _)).toSet
-    // dropped versions' RECORDED change files — captured before their
-    // manifests go away, known-dead like droppedRefs
-    val droppedChangeRefs = drop
-      .flatMap(v => changeFilesOf(spark, dir, v).getOrElse(Seq.empty))
-      .toSet
+    // and exempt from the orphan grace period; so are dropped versions'
+    // RECORDED change files
+    val dropM = drop.map(manifest(spark, dir, _))
+    val droppedRefs = dropM.flatMap(_.files).toSet
+    val droppedChangeRefs = dropM.flatMap(_.changeFiles.getOrElse(Nil)).toSet
     drop.foreach { v =>
       f.delete(manifestPath(dir, v), false)
       f.delete(bloomPath(dir, v), true) // version-scoped bloom sidecar
@@ -272,12 +264,12 @@ private[sources] trait SnapshotMaintenance { this: SnapshotLog.type =>
     // commit races and compacted-away vectors)
     val dvRoot = new Path(logDir(dir), "dv")
     if (f.exists(dvRoot)) {
-      val referenced = keep.flatMap(dvOf(spark, dir, _)).toSet
+      val referenced = keep.flatMap(_.dv).toSet
       f.listStatus(dvRoot).foreach { st =>
         if (!referenced(st.getPath.getName)) f.delete(st.getPath, true)
       }
     }
-    val live = keep.flatMap(filesOf(spark, dir, _)).toSet
+    val live = keep.flatMap(_.files).toSet
     val dataRoot = new Path(dir, "data")
     val now = System.currentTimeMillis()
     var removedFiles = 0
@@ -303,9 +295,7 @@ private[sources] trait SnapshotMaintenance { this: SnapshotLog.type =>
     // dead now; unreferenced (lost commit races) → grace period
     val changesRoot = new Path(dir, "changes")
     if (f.exists(changesRoot)) {
-      val liveChanges = keep
-        .flatMap(v => changeFilesOf(spark, dir, v).getOrElse(Seq.empty))
-        .toSet
+      val liveChanges = keep.flatMap(_.changeFiles.getOrElse(Nil)).toSet
       f.listStatus(changesRoot).foreach { d =>
         val parts = f.listStatus(d.getPath).toSeq.filter(_.isFile)
         val (keepC, dropC) = parts.partition { s =>

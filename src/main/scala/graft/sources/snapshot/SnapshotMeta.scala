@@ -45,127 +45,89 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
   private[sources] def manifestPath(dir: String, v: Long) =
     new Path(logDir(dir), s"v$v.manifest")
 
-  private[sources] def manifestLines(spark: SparkSession, dir: String,
-      v: Long): Seq[String] = {
-    val f = fs(spark, dir)
-    val in = f.open(manifestPath(dir, v))
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
+  /** Version `v`'s manifest: one open, one parse ([[Manifest.parse]]).
+    * Never cached across calls — a table directory can be dropped and
+    * re-created at the same path. */
+  private[graft] def manifest(spark: SparkSession, dir: String,
+      v: Long): Manifest = {
+    val in = fs(spark, dir).open(manifestPath(dir, v))
+    try Manifest.parse(scala.io.Source.fromInputStream(in, "UTF-8").getLines())
     finally in.close()
   }
 
-  private[sources] def filesOf(spark: SparkSession, dir: String, v: Long): Seq[String] =
-    manifestLines(spark, dir, v).filterNot(_.startsWith("#"))
+  /** The latest version (None for a fresh table) and its manifest (empty
+    * for a fresh table) — one listing, one open: what a verb reads once
+    * per attempt and builds its commit on. */
+  private[sources] def tip(spark: SparkSession,
+      dir: String): (Option[Long], Manifest) =
+    versions(spark, dir).lastOption match {
+      case Some(v) => (Some(v), manifest(spark, dir, v))
+      case None    => (None, Manifest.empty)
+    }
 
-  /** The stream batch id a version was committed under, if any
-    * (`#batch=<id>` header line — see [[commitBatch]]). */
-  def batchOf(spark: SparkSession, dir: String, v: Long): Option[Long] =
-    manifestLines(spark, dir, v)
-      .collectFirst { case l if l.startsWith("#batch=") =>
-        l.stripPrefix("#batch=").toLong }
-
-  /** The replay high-water mark a non-batch commit carries forward
-    * (`#lastbatch=` header) so retention can never blind the guard. */
-  private[sources] def lastBatchHeaderOf(spark: SparkSession, dir: String,
-      v: Long): Option[Long] =
-    manifestLines(spark, dir, v)
-      .collectFirst { case l if l.startsWith("#lastbatch=") =>
-        l.stripPrefix("#lastbatch=").toLong }
-
-  /** The `#lastbatch=` header for a verb's commit: the current
-    * high-water mark, re-read inside the verb's retry loop. */
-  private[sources] def watermarkHeader(spark: SparkSession,
-      dir: String): Seq[String] =
-    lastBatch(spark, dir).map(b => s"#lastbatch=$b").toSeq
-
-  /** The newest batch id committed ANYWHERE in the retained log — the
-    * MAX over every retained version's `#batch=` (the ingesting commit)
-    * and `#lastbatch=` (the high-water mark every non-batch verb carries
-    * forward) headers. The replay guard must use this, not
-    * `batchOf(latest)`: a non-batch commit (deleteWhere, optimize, plain
-    * commit) landing between a batch commit and its at-least-once replay
-    * would otherwise blind the guard and the replayed batch's rows would
-    * be committed twice — and without the carried watermark, a vacuum
-    * that drops every `#batch=`-bearing version after a rewrite would do
-    * the same (ReplayGuardSpec pins it). Max, not newest-first: a
-    * RESTORE re-publishes an OLD `#batch=` header, and the mark must
-    * never move backwards. Cost: one tiny manifest read per retained
-    * version, the `history()` class. */
-  def lastBatch(spark: SparkSession, dir: String): Option[Long] = {
-    val vs = versions(spark, dir)
-    val ids = vs.flatMap(v => batchOf(spark, dir, v).toSeq ++
-      lastBatchHeaderOf(spark, dir, v).toSeq)
-    if (ids.isEmpty) None else Some(ids.max)
+  /** [[tip]] of a table that must already hold a snapshot. */
+  private[sources] def requireTip(spark: SparkSession,
+      dir: String): (Long, Manifest) = {
+    val (v, m) = tip(spark, dir)
+    require(v.nonEmpty, s"no committed snapshot under $dir")
+    (v.get, m)
   }
 
-  /** The table schema as of a version, if the manifest recorded one
-    * (`#schema=` header; logs written before schema tracking have none). */
-  def schemaOf(spark: SparkSession, dir: String, v: Long): Option[StructType] =
-    manifestLines(spark, dir, v)
-      .collectFirst { case l if l.startsWith("#schema=") =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType] }
+  private[sources] def filesOf(spark: SparkSession, dir: String, v: Long): Seq[String] =
+    manifest(spark, dir, v).files
 
-  private[sources] def schemaHeader(s: StructType): String = s"#schema=${s.json}"
+  /** The stream batch id a version was committed under, if any
+    * (see [[commitBatch]]). */
+  def batchOf(spark: SparkSession, dir: String, v: Long): Option[Long] =
+    manifest(spark, dir, v).batch
+
+  /** The newest batch id committed ANYWHERE in the log — the replay
+    * guard's high-water mark ([[Manifest.mark]]), read from the latest
+    * manifest alone: every commit stamps it, so a non-batch commit
+    * (deleteWhere, optimize, plain commit) landing between a batch commit
+    * and its at-least-once replay cannot blind the guard, and neither can
+    * a vacuum that drops every batch-bearing version (ReplayGuardSpec
+    * pins both). A restore does not re-publish the restored version's
+    * batch id; it stamps the current mark, so the mark never moves
+    * backwards. */
+  def lastBatch(spark: SparkSession, dir: String): Option[Long] =
+    tip(spark, dir)._2.mark
+
+  /** The table schema as of a version, if the manifest recorded one
+    * (logs written before schema tracking have none). */
+  def schemaOf(spark: SparkSession, dir: String, v: Long): Option[StructType] =
+    manifest(spark, dir, v).schema
 
   // -------------------------------------------------------------------
   // COLUMN MAPPING — metadata-only RENAME/DROP COLUMN (round 12)
   // -------------------------------------------------------------------
-  // The `#schema=` header names columns LOGICALLY (what readers see);
+  // The manifest's schema names columns LOGICALLY (what readers see);
   // parquet files store PHYSICAL names, immutable once a column first
-  // materializes. `#colmap=` records every logical→physical pair that
-  // differs (RENAME keeps the physical name, so old files need no
-  // rewrite), and `#dropped=` records BURNED physical names (a DROP
-  // hides the column; its bytes stay in old files, so the name can
+  // materializes. `Manifest.colmap` records every logical→physical pair
+  // that differs (RENAME keeps the physical name, so old files need no
+  // rewrite), and `Manifest.dropped` records BURNED physical names (a
+  // DROP hides the column; its bytes stay in old files, so the name can
   // never be re-used — the Delta column-mapping discipline, with loud
-  // refusal where Delta mints fresh ids). Both headers are carried
-  // forward by EVERY commit ([[commitFiles]] auto-carries them when the
-  // verb's own header doesn't set them), versioned like the schema so
-  // time travel across chained renames reads each version under its own
-  // names. Names are stat-escaped (the `#filestat=` recipe), pairs
-  // tab-separated.
+  // refusal where Delta mints fresh ids). Every commit carries both
+  // (`Manifest.next`), versioned like the schema so time travel across
+  // chained renames reads each version under its own names.
 
   /** Version `v`'s logical→physical column mapping (empty = identity). */
   def colmapOf(spark: SparkSession, dir: String,
       v: Long): Map[String, String] =
-    manifestLines(spark, dir, v)
-      .collectFirst { case l if l.startsWith("#colmap=") =>
-        val body = l.stripPrefix("#colmap=")
-        if (body.isEmpty) Map.empty[String, String]
-        else body.split("\t").map { pair =>
-          val i = pair.indexOf(':')
-          statUnesc(pair.take(i)) -> statUnesc(pair.drop(i + 1))
-        }.toMap
-      }.getOrElse(Map.empty)
+    manifest(spark, dir, v).colmap
 
   /** Version `v`'s burned physical names (dropped columns' storage
     * names — reserved forever, see [[dropColumn]]). */
   def droppedOf(spark: SparkSession, dir: String, v: Long): Set[String] =
-    manifestLines(spark, dir, v)
-      .collectFirst { case l if l.startsWith("#dropped=") =>
-        val body = l.stripPrefix("#dropped=")
-        if (body.isEmpty) Set.empty[String]
-        else body.split("\t").map(statUnesc).toSet
-      }.getOrElse(Set.empty)
-
-  /** The two mapping headers — ALWAYS emitted together (an explicitly
-    * empty header suppresses [[commitFiles]]' auto-carry, which
-    * [[restore]] needs to roll a mapping back). */
-  private[sources] def colmapHeaders(cm: Map[String, String],
-      dropped: Set[String]): Seq[String] = Seq(
-    "#colmap=" + cm.toSeq.sortBy(_._1)
-      .map { case (l, p) => s"${statEsc(l)}:${statEsc(p)}" }
-      .mkString("\t"),
-    "#dropped=" + dropped.toSeq.sorted.map(statEsc).mkString("\t"))
+    manifest(spark, dir, v).dropped
 
   // -------------------------------------------------------------------
   // TABLE PROPERTIES — versioned key/value metadata (round 12)
   // -------------------------------------------------------------------
-  // `#tblprop=` records the table's properties (stat-escaped k:v tab
-  // pairs, the #colmap encoding), auto-carried by every commit at the
-  // [[commitFiles]] choke point and rolled back by [[restore]] with the
-  // rest of the state. The one property the engine itself reads is
-  // [[ChangeFeedProperty]].
+  // The manifest records the table's properties; every commit carries
+  // them and [[restore]] rolls them back with the rest of the state. The
+  // one property the engine itself reads is [[ChangeFeedProperty]].
 
   /** The property that turns on the RECORDED change feed: when
     * `graft.changeFeed=true`, every row-rewriting verb writes its exact
@@ -182,20 +144,7 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
   /** Version `v`'s table properties (empty when none were ever set). */
   def tablePropertiesOf(spark: SparkSession, dir: String,
       v: Long): Map[String, String] =
-    manifestLines(spark, dir, v)
-      .collectFirst { case l if l.startsWith("#tblprop=") =>
-        val body = l.stripPrefix("#tblprop=")
-        if (body.isEmpty) Map.empty[String, String]
-        else body.split("\t").map { pair =>
-          val i = pair.indexOf(':')
-          statUnesc(pair.take(i)) -> statUnesc(pair.drop(i + 1))
-        }.toMap
-      }.getOrElse(Map.empty)
-
-  private[sources] def tblpropHeader(props: Map[String, String]): String =
-    "#tblprop=" + props.toSeq.sortBy(_._1)
-      .map { case (k, value) => s"${statEsc(k)}:${statEsc(value)}" }
-      .mkString("\t")
+    manifest(spark, dir, v).tblprops
 
   /** `ALTER TABLE ... SET TBLPROPERTIES (...)` / `UNSET TBLPROPERTIES`
     * as ONE metadata-only commit (set wins over unset on the same key;
@@ -209,23 +158,13 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
       require(!s.contains('\n') && !s.contains('\t'),
         s"property part '$s' cannot carry a tab or newline"))
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
+      val (latest, m) = requireTip(spark, dir)
       // fail at ENABLE time when a user column collides with the feed's
       // marker names — not on the first rewrite that records changes
       if (set.get(ChangeFeedProperty).exists(_.equalsIgnoreCase("true")))
-        requireCdfNamesFree(spark, dir, latest)
-      val props = tablePropertiesOf(spark, dir, latest) -- unset ++ set
-      val carried = manifestLines(spark, dir, latest).filter(l =>
-        l.startsWith("#schema=") || l.startsWith("#filestat=") ||
-          l.startsWith("#dv=") || l.startsWith("#check=") ||
-          l.startsWith("#partition=") || l.startsWith("#filepart="))
-      commitFiles(spark, dir, filesOf(spark, dir, latest),
-        java.util.UUID.randomUUID().toString,
-        header = Seq(tblpropHeader(props)) ++ carried ++
-          watermarkHeader(spark, dir),
-        base = Some(Some(latest))) match {
+        requireCdfNamesFree(dir, m)
+      commitFiles(spark, dir, m.next.copy(tblprops = m.tblprops -- unset ++ set),
+        java.util.UUID.randomUUID().toString, base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => () // raced — recompute against the new latest
       }
@@ -246,9 +185,8 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
     Seq("_change_type", "__del", "_commit_version", "_commit_timestamp",
       "_poll_version")
 
-  private[sources] def requireCdfNamesFree(spark: SparkSession, dir: String,
-      v: Long): Unit = {
-    val clash = schemaOf(spark, dir, v)
+  private[sources] def requireCdfNamesFree(dir: String, m: Manifest): Unit = {
+    val clash = m.schema
       .map(_.fieldNames.toSeq.filter(CdfReservedNames.contains))
       .getOrElse(Seq.empty)
     require(clash.isEmpty,
@@ -257,7 +195,7 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
         s"$ChangeFeedProperty off")
   }
 
-  /** Is the recorded change feed on for the table as of version `v`?
+  /** Is the recorded change feed on for the table as of manifest `m`?
     * When it is, the reserved marker names must be free — checked HERE
     * (the one gate every recording verb passes) so deleteWhere /
     * updateWhere / replaceWhere / overwritePartitions / tombstoneWhere
@@ -269,39 +207,31 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
     * applyDeletionVectors / materialize) pass `requireNamesFree =
     * false`: they record an EMPTY change set and write no marker
     * column, so a clash must not block table maintenance. */
-  private[sources] def cdfEnabled(spark: SparkSession, dir: String,
-      v: Long, requireNamesFree: Boolean = true): Boolean = {
-    val on = tablePropertiesOf(spark, dir, v)
-      .get(ChangeFeedProperty).exists(_.equalsIgnoreCase("true"))
-    if (on && requireNamesFree) requireCdfNamesFree(spark, dir, v)
+  private[sources] def cdfEnabled(dir: String, m: Manifest,
+      requireNamesFree: Boolean = true): Boolean = {
+    val on = m.tblprops.get(ChangeFeedProperty).exists(_.equalsIgnoreCase("true"))
+    if (on && requireNamesFree) requireCdfNamesFree(dir, m)
     on
   }
 
   /** Version `v`'s RECORDED change files: `Some(paths)` iff the commit
-    * declared its row-level changes (`#cdf=1` — possibly zero files for
-    * a net-zero rewrite like [[optimize]]); `None` for ordinary commits
-    * (pure appends derive their inserts at file grain; anything else is
-    * not CDF-readable). */
+    * declared its row-level changes (possibly zero files for a net-zero
+    * rewrite like [[optimize]]); `None` for ordinary commits (pure
+    * appends derive their inserts at file grain; anything else is not
+    * CDF-readable). */
   def changeFilesOf(spark: SparkSession, dir: String,
-      v: Long): Option[Seq[String]] = {
-    val lines = manifestLines(spark, dir, v)
-    if (!lines.contains("#cdf=1")) None
-    else Some(lines.filter(_.startsWith("#changefile="))
-      .map(_.stripPrefix("#changefile=")))
-  }
-
-  private[sources] def cdfHeaders(changeFiles: Seq[String]): Seq[String] =
-    "#cdf=1" +: changeFiles.map(p => s"#changefile=$p")
+      v: Long): Option[Seq[String]] =
+    manifest(spark, dir, v).changeFiles
 
   /** Write `df` (table columns + `_change_type`) as this commit's
     * change files under `changes/<changeId>/` — physical column names
     * like every data file (rename-immune), plain layout (change files
     * are read whole, never pruned). */
   private[sources] def writeChangeFiles(spark: SparkSession, dir: String,
-      df: DataFrame, changeId: String): Seq[String] = {
+      m: Manifest, df: DataFrame, changeId: String): Seq[String] = {
     val f = fs(spark, dir)
     val cdir = new Path(dir, s"changes/$changeId")
-    toPhysical(spark, dir, df).write.parquet(cdir.toString)
+    toPhysical(dir, m, df).write.parquet(cdir.toString)
     f.listStatus(cdir).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).sorted
@@ -320,10 +250,10 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
     * insert change rows without re-evaluating the incoming plan.
     * Hive-partitioned files re-attach their partition values via
     * basePath; physical→logical renaming mirrors [[scanWithMeta]]. */
-  private[sources] def readBackWritten(spark: SparkSession, dir: String,
-      latest: Long, paths: Seq[String], pcs: Seq[String],
+  private[sources] def readBackWritten(spark: SparkSession, m: Manifest,
+      paths: Seq[String], pcs: Seq[String],
       outSchema: StructType): DataFrame = {
-    val cm = colmapOf(spark, dir, latest)
+    val cm = m.colmap
     val phys = physicalSchema(cm, outSchema)
     val raw =
       if (pcs.isEmpty) spark.read.schema(phys).parquet(paths: _*)
@@ -344,85 +274,48 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
     else StructType(schema.fields.map(f =>
       f.copy(name = cm.getOrElse(f.name, f.name))))
 
-  /** Rename `df`'s columns logical→physical for a write into `dir`,
-    * refusing (loudly) any NEW column whose name is already a physical
-    * name another column owns or a burned dropped name — re-using it
-    * would make old files' bytes resurrect under the new column. */
-  private[sources] def toPhysical(spark: SparkSession, dir: String,
-      df: DataFrame): DataFrame = {
-    val vOpt = versions(spark, dir).lastOption
-    val cm = vOpt.map(colmapOf(spark, dir, _))
-      .getOrElse(Map.empty[String, String])
-    val burned = vOpt.map(droppedOf(spark, dir, _))
-      .getOrElse(Set.empty[String])
-    if (cm.isEmpty && burned.isEmpty) df
-    else {
-      val owned = cm.values.toSet
-      df.columns.foreach { c =>
-        if (!cm.contains(c))
-          require(!owned.contains(c) && !burned.contains(c),
-            s"column name '$c' is reserved by an earlier RENAME/DROP " +
-              s"COLUMN on $dir (it is a physical storage name old files " +
-              "still carry); pick a different name")
-      }
-      df.select(df.columns.toSeq.map(c =>
-        col(s"`$c`").as(cm.getOrElse(c, c))): _*)
+  /** Refuse (loudly) any NEW column name of a write into `dir` that is
+    * already a physical name another column owns or a burned dropped
+    * name — re-using it would make old files' bytes resurrect under the
+    * new column. */
+  private def requireUnreserved(dir: String, m: Manifest,
+      names: Seq[String]): Unit = {
+    val owned = m.colmap.values.toSet
+    names.foreach { c =>
+      if (!m.colmap.contains(c))
+        require(!owned.contains(c) && !m.dropped.contains(c),
+          s"column name '$c' is reserved by an earlier RENAME/DROP " +
+            s"COLUMN on $dir (it is a physical storage name old files " +
+            "still carry); pick a different name")
     }
   }
+
+  /** Rename `df`'s columns logical→physical for a write into `dir` whose
+    * latest manifest is `m` ([[requireUnreserved]] first). */
+  private[sources] def toPhysical(dir: String, m: Manifest,
+      df: DataFrame): DataFrame =
+    if (m.colmap.isEmpty && m.dropped.isEmpty) df
+    else {
+      requireUnreserved(dir, m, df.columns.toSeq)
+      df.select(df.columns.toSeq.map(c =>
+        col(s"`$c`").as(m.colmap.getOrElse(c, c))): _*)
+    }
 
   /** [[toPhysical]] for a write SCHEMA (the executor-side v2 streaming
-    * write maps before encoding): renames apply, reserved-name re-use
-    * refuses loudly. Identity (and validation-free) on unmapped
-    * tables. */
+    * write maps before encoding). Identity (and validation-free) on
+    * unmapped tables. */
   private[sources] def physicalWriteSchema(spark: SparkSession,
       dir: String, schema: StructType): StructType = {
-    val vOpt = versions(spark, dir).lastOption
-    val cm = vOpt.map(colmapOf(spark, dir, _))
-      .getOrElse(Map.empty[String, String])
-    val burned = vOpt.map(droppedOf(spark, dir, _))
-      .getOrElse(Set.empty[String])
-    if (cm.isEmpty && burned.isEmpty) schema
-    else {
-      val owned = cm.values.toSet
-      schema.fieldNames.foreach { c =>
-        if (!cm.contains(c))
-          require(!owned.contains(c) && !burned.contains(c),
-            s"column name '$c' is reserved by an earlier RENAME/DROP " +
-              s"COLUMN on $dir (it is a physical storage name old files " +
-              "still carry); pick a different name")
-      }
-      physicalSchema(cm, schema)
-    }
+    val m = tip(spark, dir)._2
+    requireUnreserved(dir, m, schema.fieldNames.toSeq)
+    physicalSchema(m.colmap, schema)
   }
 
-  /** Remap RAW (physical-keyed) per-file stats to version `v`'s LOGICAL
-    * names: renamed columns' stats follow the rename, burned columns'
-    * stats drop (a stale stat attributed to a re-used name would prune
-    * WRONGLY — though re-use is refused anyway), untouched names pass
-    * through. */
-  private[sources] def logicalStats(cm: Map[String, String], dropped: Set[String],
-      raw: Map[String, Map[String, ColStat]])
-      : Map[String, Map[String, ColStat]] =
-    if (cm.isEmpty && dropped.isEmpty) raw
-    else {
-      val inv = cm.map(_.swap) // physical → logical (injective: owners are unique)
-      raw.map { case (p, st) =>
-        p -> st.flatMap { case (c, s) =>
-          inv.get(c) match {
-            case Some(l)                      => Some(l -> s)
-            case None if dropped.contains(c)  => None
-            case None                         => Some(c -> s)
-          }
-        }
-      }
-    }
-
-  /** [[fileStatsOf]] under version `v`'s LOGICAL column names — what
+  /** Version `v`'s per-file stats under its LOGICAL column names — what
     * every pruning consumer keys by. */
   private[graft] def fileStatsLogicalOf(spark: SparkSession, dir: String,
       v: Long): Map[String, Map[String, ColStat]] =
-    logicalStats(colmapOf(spark, dir, v), droppedOf(spark, dir, v),
-      fileStatsOf(spark, dir, v))
+    manifest(spark, dir, v).logicalStats
 
   /** Widen `prev` with any columns `next` adds. Existing columns must
     * keep their type (a silent type change would corrupt every older
@@ -471,8 +364,8 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
     * hive-layout partitioned (`data/<uuid>/c=v/part-*.parquet`) and
     * every returned file is PARTITION-PURE — one tuple per file, the
     * invariant [[readPartition]]'s manifest-level prune relies on. */
-  private[sources] def writeData(spark: SparkSession, dir: String, df0: DataFrame,
-      commitId: String,
+  private[sources] def writeData(spark: SparkSession, dir: String, m: Manifest,
+      df0: DataFrame, commitId: String,
       partitionCols: Seq[String] = Seq.empty): Seq[String] = {
     val f = fs(spark, dir)
     val dataDir = new Path(dir, s"data/$commitId")
@@ -481,14 +374,10 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
     // stays literal — and a NEW layout may only be declared on
     // storage-named columns (a renamed column's dir names would
     // diverge from the tuples every manifest consumer parses)
-    val df = toPhysical(spark, dir, df0)
-    if (partitionCols.nonEmpty) {
-      val cmP = versions(spark, dir).lastOption
-        .map(colmapOf(spark, dir, _)).getOrElse(Map.empty[String, String])
-      partitionCols.foreach(c => require(!cmP.contains(c),
+    val df = toPhysical(dir, m, df0)
+    partitionCols.foreach(c => require(!m.colmap.contains(c),
         s"partition column '$c' is a RENAMED column on $dir — declare " +
           "partition layouts on storage-named columns only"))
-    }
     if (partitionCols.isEmpty) {
       df.write.parquet(dataDir.toString)
       f.listStatus(dataDir).toSeq

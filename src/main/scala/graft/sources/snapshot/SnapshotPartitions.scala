@@ -14,32 +14,20 @@ private[sources] trait SnapshotPartitions { this: SnapshotLog.type =>
   // PARTITIONED TABLES — directory-level pruning inside the format
   // -------------------------------------------------------------------
 
-  /** Declared partition columns of a version (`#partition=` header) —
-    * empty for an unpartitioned version. Partitioning is per-VERSION
-    * state like the schema: every mutating verb carries it forward;
-    * only a full-replace [[commit]]/[[commitPartitioned]] re-decides
-    * the layout. */
+  /** Declared partition columns of a version — empty for an
+    * unpartitioned version. Partitioning is per-VERSION state like the
+    * schema: every mutating verb carries it forward; only a full-replace
+    * [[commit]]/[[commitPartitioned]] re-decides the layout. */
   def partitionColsOf(spark: SparkSession, dir: String,
       v: Long): Seq[String] =
-    manifestLines(spark, dir, v).collectFirst {
-      case l if l.startsWith("#partition=") =>
-        l.stripPrefix("#partition=").split(",").toSeq
-    }.getOrElse(Seq.empty)
+    manifest(spark, dir, v).partitionCols
 
-  /** Per-file partition tuples of a version (`#filepart=` lines):
-    * file path → (partition column → rendered value). Readers prune
-    * from THESE — never by re-parsing paths at read time. */
+  /** Per-file partition tuples of a version: file path → (partition
+    * column → rendered value). Readers prune from THESE — never by
+    * re-parsing paths at read time. */
   private[graft] def filePartsOf(spark: SparkSession, dir: String,
       v: Long): Map[String, Map[String, String]] =
-    manifestLines(spark, dir, v)
-      .filter(_.startsWith("#filepart="))
-      .map { l =>
-        val parts = l.stripPrefix("#filepart=").split("\t")
-        parts.head -> parts.tail.map { kv =>
-          val i = kv.indexOf('=')
-          kv.take(i) -> statUnesc(kv.drop(i + 1))
-        }.toMap
-      }.toMap
+    manifest(spark, dir, v).fileParts
 
   /** Hive path-segment unescape (Spark percent-encodes `/:=%` etc. in
     * partition dir names); values recorded in the manifest are the RAW
@@ -117,31 +105,12 @@ private[sources] trait SnapshotPartitions { this: SnapshotLog.type =>
       s"partitioned data file lacks a '$c=' path segment: $path")))
   }
 
-  private[sources] def filePartLine(path: String, tuple: Seq[(String, String)]) =
-    s"#filepart=$path" +
-      tuple.map { case (c, v) => s"\t$c=${statEsc(v)}" }.mkString
-
-  /** Partition headers for a commit: the declaration plus one
-    * `#filepart=` line per file — carried files verbatim from the
-    * previous version's recorded tuples, new files derived from their
-    * freshly written paths. Empty when the table is unpartitioned. */
-  private[sources] def partHeaders(partCols: Seq[String],
-      prevParts: Map[String, Map[String, String]],
-      carried: Seq[String], newFiles: Seq[String]): Seq[String] =
-    if (partCols.isEmpty) Seq.empty
-    else s"#partition=${partCols.mkString(",")}" +:
-      (carried.flatMap(p => prevParts.get(p).map(t =>
-        filePartLine(p, partCols.map(c => c -> t(c))))) ++
-        newFiles.map(p => filePartLine(p, partTupleOfPath(p, partCols))))
-
-  /** [[partHeaders]] reading the carried state from `prevV`. */
-  private[sources] def propagatedPartHeaders(spark: SparkSession, dir: String,
-      prevV: Long, carried: Seq[String],
-      newFiles: Seq[String]): Seq[String] = {
-    val pcs = partitionColsOf(spark, dir, prevV)
-    if (pcs.isEmpty) Seq.empty
-    else partHeaders(pcs, filePartsOf(spark, dir, prevV), carried, newFiles)
-  }
+  /** The partition tuples of freshly written `files` under layout
+    * `partCols`, from their paths (empty when unpartitioned). */
+  private[sources] def freshParts(partCols: Seq[String],
+      files: Seq[String]): Map[String, Map[String, String]] =
+    if (partCols.isEmpty) Map.empty
+    else files.map(p => p -> partTupleOfPath(p, partCols).toMap).toMap
 
   /** Decode a RECORDED partition value string back to the column's JVM
     * type, for range/point pruning on partition columns (their values
@@ -208,24 +177,22 @@ private[sources] trait SnapshotPartitions { this: SnapshotLog.type =>
     var files: Seq[String] = null
     var validated: Option[Seq[(String, String)]] = None
     while (true) {
-      val latest = versions(spark, dir).lastOption
-      val checks = latest.map(checksOf(spark, dir, _)).getOrElse(Seq.empty)
+      val (latest, m) = tip(spark, dir)
       if (files == null) {
         val (wired, assertChecks) =
-          observedChecks(df, checks, commitId, s"commit into $dir")
-        files = writeData(spark, dir, wired, commitId, partitionCols)
+          observedChecks(df, m.checks, commitId, s"commit into $dir")
+        files = writeData(spark, dir, m, wired, commitId, partitionCols)
         assertChecks()
-        validated = Some(checks)
-      } else if (!validated.contains(checks)) {
-        requireChecksPass(checks, df, s"commit into $dir")
-        validated = Some(checks)
+        validated = Some(m.checks)
+      } else if (!validated.contains(m.checks)) {
+        requireChecksPass(m.checks, df, s"commit into $dir")
+        validated = Some(m.checks)
       }
-      commitFiles(spark, dir, files, commitId,
-        header = Seq(schemaHeader(df.schema)) ++
-          partHeaders(partitionCols, Map.empty, Seq.empty, files) ++
-          statHeaders(spark, dir, files, statCols) ++ checkHeaders(checks) ++
-          watermarkHeader(spark, dir),
-        base = Some(latest)) match {
+      commitFiles(spark, dir, m.next.replace(files, df.schema).copy(
+          partitionCols = partitionCols,
+          fileParts = freshParts(partitionCols, files),
+          rawStats = freshStats(spark, m, files, statCols)),
+        commitId, base = Some(latest)) match {
         case Some(v) => return v
         case None    => ()
       }
@@ -247,21 +214,15 @@ private[sources] trait SnapshotPartitions { this: SnapshotLog.type =>
   def readPartition(spark: SparkSession, dir: String, where: Map[String, Any],
       version: Option[Long] = None): (DataFrame, Int, Int) = {
     require(where.nonEmpty, "readPartition needs at least one column=value")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot under $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v of $dir does not exist (have ${vs.mkString(",")})")
-    val pcs = partitionColsOf(spark, dir, v)
+    val (v, m) = versionAt(spark, dir, version)
+    val pcs = m.partitionCols
     val notPart = where.keySet.filterNot(pcs.contains)
     require(notPart.isEmpty,
       s"version $v of $dir is not partitioned by ${notPart.mkString(",")} " +
         s"(declared: ${if (pcs.isEmpty) "none" else pcs.mkString(",")})")
     val rendered = where.map { case (c, x) => c -> renderPartValue(x) }
-    val parts = filePartsOf(spark, dir, v)
-    val files = filesOf(spark, dir, v)
-    val kept = files.filter { p =>
-      parts.get(p) match {
+    val kept = m.files.filter { p =>
+      m.fileParts.get(p) match {
         case Some(t) => rendered.forall { case (c, rv) => t.get(c).contains(rv) }
         case None    => true // unrecorded file — conservative
       }
@@ -269,14 +230,6 @@ private[sources] trait SnapshotPartitions { this: SnapshotLog.type =>
     val pred = where.map { case (c, x) =>
       if (x == null) col(c).isNull else col(c) === lit(x)
     }.reduce(_ && _)
-    val schema = schemaOf(spark, dir, v)
-    val df =
-      if (kept.nonEmpty) readFiles(spark, dir, v, kept).filter(pred)
-      else schema match {
-        case Some(s) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        case None => read(spark, dir, Some(v)).filter(pred).limit(0)
-      }
-    (df, kept.size, files.size)
+    (readKept(spark, dir, v, m, kept, pred), kept.size, m.files.size)
   }
 }

@@ -217,51 +217,22 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
     try Some(probeLong(dt, x, java.math.RoundingMode.UNNECESSARY))
     catch { case _: ArithmeticException => None }
 
-  // manifest-safe string escaping for StrStat bounds: URL-encode (covers
-  // '\t' entry separator, ':' field separator, newlines, '%'), then
-  // escape the one URL-safe char the format claims — '*' marks "+∞"
-  private[sources] def statEsc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8").replace("*", "%2A")
-  private[sources] def statUnesc(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** Manifest stat header:
-    * `#filestat=<path>\t<col>:L:<min>:<max>` (long-encoded types) or
-    * `#filestat=<path>\t<col>:S:<esc(min)>:<esc(maxUpper)|*>` (strings);
-    * the null-aware variants `LN`/`SN` append `:<0|1>` — whether the
-    * file holds any null in the column (IS NULL pruning). Legacy
-    * untagged `<col>:<min>:<max>` lines still parse as L. A column that
-    * is all-NULL in a file is omitted (the file is conservatively kept
-    * by every prune — correct: an IS NULL probe must keep it). */
-  private[sources] def statLine(path: String, stats: Seq[(String, ColStat)]) =
-    s"#filestat=$path" + stats.map {
-      case (c, LongStat(lo, hi, None)) => s"\t$c:L:$lo:$hi"
-      case (c, LongStat(lo, hi, Some(n))) =>
-        s"\t$c:LN:$lo:$hi:${if (n) 1 else 0}"
-      case (c, StrStat(lo, hi, None)) =>
-        s"\t$c:S:${statEsc(lo)}:${hi.map(statEsc).getOrElse("*")}"
-      case (c, StrStat(lo, hi, Some(n))) =>
-        s"\t$c:SN:${statEsc(lo)}:${hi.map(statEsc).getOrElse("*")}:" +
-          s"${if (n) 1 else 0}"
-    }.mkString
-
   /** Compute per-file min/max for `statCols` over freshly written
-    * `files` — ONE scan of the new files only (the Delta write-time
-    * stats rule: cost ∝ the commit, never the table). The collected
-    * frame is bounded by the commit's file count (≤ shuffle
-    * partitions per write), not by rows. */
-  private[sources] def statHeaders(spark: SparkSession, dir: String,
-      files: Seq[String], statCols0: Seq[String]): Seq[String] = {
-    if (statCols0.isEmpty || files.isEmpty) return Seq.empty
-    // stat lines record PHYSICAL names (what the files carry; identical
-    // to logical on never-renamed tables) — consumers remap back
-    // through fileStatsLogicalOf. Callers may pass either form: a
-    // logical name maps through the colmap, a physical one is its own
-    // fixed point (logical names can never shadow a physical name —
-    // the toPhysical/renameColumn refusals).
-    val cm = versions(spark, dir).lastOption
-      .map(colmapOf(spark, dir, _)).getOrElse(Map.empty[String, String])
-    val statCols = statCols0.map(c => cm.getOrElse(c, c))
+    * `files` of a table whose latest manifest is `m` — ONE scan of the
+    * new files only (the Delta write-time stats rule: cost ∝ the commit,
+    * never the table); returns path → encoded entries
+    * ([[Manifest.encodeStats]]). The collected frame is bounded by the
+    * commit's file count (≤ shuffle partitions per write), not by rows. */
+  private[sources] def freshStats(spark: SparkSession, m: Manifest,
+      files: Seq[String], statCols0: Seq[String]): Map[String, String] = {
+    if (statCols0.isEmpty || files.isEmpty) return Map.empty
+    // stats record PHYSICAL names (what the files carry; identical to
+    // logical on never-renamed tables) — consumers remap back through
+    // Manifest.logicalStats. Callers may pass either form: a logical
+    // name maps through the colmap, a physical one is its own fixed
+    // point (logical names can never shadow a physical name — the
+    // toPhysical/renameColumn refusals).
+    val statCols = statCols0.map(c => m.colmap.getOrElse(c, c))
     val df = spark.read.parquet(files: _*)
     statCols.foreach { c =>
       val dt = df.schema(c).dataType
@@ -294,31 +265,25 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
               LongStat(encodeStatLong(lo), encodeStatLong(hi), nul))
           }
         }
-        statLine(p, stats)
+        p -> Manifest.encodeStats(stats)
       }
-      // a file absent from the scan (zero rows) gets no stat line and is
+      // a file absent from the scan (zero rows) gets no stats and is
       // conservatively kept by every prune
-    }
+    }.toMap
   }
 
-  /** Stat headers for a version that CARRIES files from `prevV` and adds
-    * `newFiles`: carried files keep their recorded stats verbatim, new
-    * files get stats computed over the SAME column set — so zone maps
-    * survive deleteWhere/optimize instead of dying at the first rewrite.
-    * Empty when the previous version had no stats (nothing to keep
-    * alive). */
-  private[sources] def propagatedStatHeaders(spark: SparkSession, dir: String,
-      prevV: Long, carried: Seq[String],
-      newFiles: Seq[String]): Seq[String] = {
-    val prev = fileStatsOf(spark, dir, prevV)
-    if (prev.isEmpty) return Seq.empty
-    val cols = prev.values.flatMap(_.keys).toSeq.distinct.sorted
-    val carriedLines = carried.flatMap { p =>
-      prev.get(p).filter(_.nonEmpty).map { st =>
-        statLine(p, cols.flatMap(c => st.get(c).map(c -> _)))
-      }
-    }
-    carriedLines ++ statHeaders(spark, dir, newFiles, cols)
+  /** `m` with its file list rewritten to `carried` (a subset of its
+    * files) plus `fresh` ones: carried files keep their recorded stats
+    * and partition tuples verbatim, fresh files get stats over the SAME
+    * column set (none when `m` recorded none) and tuples from their
+    * paths — so zone maps survive deleteWhere/optimize instead of dying
+    * at the first rewrite. */
+  private[sources] def withFiles(spark: SparkSession, m: Manifest,
+      carried: Seq[String], fresh: Seq[String]): Manifest = {
+    val cols = m.stats.values.flatMap(_.keys).toSeq.distinct.sorted
+    m.copy(files = (carried ++ fresh).sorted,
+      rawStats = m.rawStats ++ freshStats(spark, m, fresh, cols),
+      fileParts = m.fileParts ++ freshParts(m.partitionCols, fresh))
   }
 
   /** [[commit]] with per-file zone-map stats for `statCols` recorded in
@@ -336,23 +301,20 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
     var validated: Option[Seq[(String, String)]] = None
     while (true) {
       // same metadata base-check + ride-the-write validation as [[commit]]
-      val latest = versions(spark, dir).lastOption
-      val checks = latest.map(checksOf(spark, dir, _)).getOrElse(Seq.empty)
+      val (latest, m) = tip(spark, dir)
       if (files == null) {
         val (wired, assertChecks) =
-          observedChecks(df, checks, commitId, s"commit into $dir")
-        files = writeData(spark, dir, wired, commitId)
+          observedChecks(df, m.checks, commitId, s"commit into $dir")
+        files = writeData(spark, dir, m, wired, commitId)
         assertChecks()
-        validated = Some(checks)
-      } else if (!validated.contains(checks)) {
-        requireChecksPass(checks, df, s"commit into $dir")
-        validated = Some(checks)
+        validated = Some(m.checks)
+      } else if (!validated.contains(m.checks)) {
+        requireChecksPass(m.checks, df, s"commit into $dir")
+        validated = Some(m.checks)
       }
-      commitFiles(spark, dir, files, commitId,
-        header = Seq(schemaHeader(df.schema)) ++
-          statHeaders(spark, dir, files, statCols) ++ checkHeaders(checks) ++
-          watermarkHeader(spark, dir),
-        base = Some(latest)) match {
+      commitFiles(spark, dir, m.next.replace(files, df.schema)
+          .copy(rawStats = freshStats(spark, m, files, statCols)),
+        commitId, base = Some(latest)) match {
         case Some(v) => return v
         case None    => () // raced — re-read the carried metadata
       }
@@ -375,28 +337,19 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
       s"cannot restore to version $toV; have ${vs.mkString(",")}")
     val latest = vs.last
     if (toV == latest) return latest // already there
-    val files = filesOf(spark, dir, toV)
-    val header = manifestLines(spark, dir, toV)
-      .filter(l => l.startsWith("#schema=") || l.startsWith("#filestat=") ||
-        l.startsWith("#dv=") || // dropping the DV would resurrect deletes
-        l.startsWith("#check=") || // constraints travel with the table state
-        l.startsWith("#partition=") || l.startsWith("#filepart="))
-    // column mapping rolls back WITH the state (the restored version's
-    // schema names need the restored colmap — chained renames would
-    // otherwise mis-resolve), emitted EXPLICITLY (possibly empty) so
-    // commitFiles' auto-carry of the newer mapping is suppressed.
-    // Burned physical names are MONOTONE: later drops' storage names
-    // stay reserved even after the rollback (their bytes are still in
-    // files other retained versions reference).
-    val mapHeader = colmapHeaders(colmapOf(spark, dir, toV),
-      droppedOf(spark, dir, toV) ++ droppedOf(spark, dir, latest))
-    // table properties roll back with the state — explicit (possibly
-    // empty) header suppresses the auto-carry of newer properties
-    val propHeader = tblpropHeader(tablePropertiesOf(spark, dir, toV))
-    commitFiles(spark, dir, files, java.util.UUID.randomUUID().toString,
-      header = header ++ mapHeader ++ Seq(propHeader) ++
-        watermarkHeader(spark, dir),
-      base = Some(Some(latest)))
+    val to = manifest(spark, dir, toV)
+    val now = manifest(spark, dir, latest)
+    // the restored version's whole state comes back — files, schema,
+    // stats, DV (dropping it would resurrect deletes), checks, layout,
+    // column mapping (the restored schema names need the restored
+    // colmap) and properties — except two things that must never move
+    // backwards: burned physical names (later drops' storage names stay
+    // reserved; their bytes are still in files other retained versions
+    // reference) and the replay mark (the restored version's batch id is
+    // not re-published; the current mark is stamped)
+    commitFiles(spark, dir,
+      to.next.copy(dropped = to.dropped ++ now.dropped, watermark = now.mark),
+      java.util.UUID.randomUUID().toString, base = Some(Some(latest)))
       .getOrElse(throw new IllegalStateException(
         s"restore to v$toV lost a race with a concurrent commit on $dir — " +
           "re-examine the new latest before retrying the rollback"))
@@ -416,20 +369,11 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
       statCols: Seq[String]): Long = {
     require(statCols.nonEmpty, "analyze needs at least one column")
     while (true) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"no committed snapshot under $dir")
-      val latest = vs.last
-      val files = filesOf(spark, dir, latest)
-      val commitId = java.util.UUID.randomUUID().toString
-      // the DV header must ride along — analyze republished the same
-      // file list, and dropping the vector would resurrect MoR deletes
-      val dvHeader = dvOf(spark, dir, latest).map(n => s"#dv=$n").toSeq
-      commitFiles(spark, dir, files, commitId,
-        header = schemaOf(spark, dir, latest).map(schemaHeader).toSeq ++
-          dvHeader ++ statHeaders(spark, dir, files, statCols) ++
-          propagatedPartHeaders(spark, dir, latest, files, Seq.empty) ++
-          checkHeaders(checksOf(spark, dir, latest)) ++
-          watermarkHeader(spark, dir),
+      val (latest, m) = requireTip(spark, dir)
+      // same file list (and DV, layout, checks) — only the stats change
+      commitFiles(spark, dir,
+        m.next.copy(rawStats = freshStats(spark, m, m.files, statCols)),
+        java.util.UUID.randomUUID().toString,
         base = Some(Some(latest))) match {
         case Some(v) => return v
         case None    => () // raced — recompute over the new latest
@@ -440,33 +384,7 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
 
   private[graft] def fileStatsOf(spark: SparkSession, dir: String,
       v: Long): Map[String, Map[String, ColStat]] =
-    manifestLines(spark, dir, v)
-      .filter(_.startsWith("#filestat="))
-      .map { l =>
-        val parts = l.stripPrefix("#filestat=").split("\t")
-        // a full ':' split is safe: statEsc URL-encodes ':' inside
-        // string bounds, so field separators are unambiguous. limit -1
-        // preserves TRAILING empty fields — an escaped empty-string
-        // bound ('c:S:lo:' or 'c:S::') must keep its arity, or the
-        // 4-ary S entry would collapse into the 3-ary legacy-long
-        // pattern and throw on "S".toLong
-        val stats: Map[String, ColStat] = parts.tail.map { s =>
-          s.split(":", -1) match {
-            case Array(c, "L", lo, hi) => c -> LongStat(lo.toLong, hi.toLong)
-            case Array(c, "LN", lo, hi, n) =>
-              c -> LongStat(lo.toLong, hi.toLong, Some(n == "1"))
-            case Array(c, "S", lo, hi) => c -> StrStat(statUnesc(lo),
-              if (hi == "*") None else Some(statUnesc(hi)))
-            case Array(c, "SN", lo, hi, n) => c -> StrStat(statUnesc(lo),
-              if (hi == "*") None else Some(statUnesc(hi)), Some(n == "1"))
-            case Array(c, lo, hi) => // legacy untagged long entry
-              c -> LongStat(lo.toLong, hi.toLong)
-            case bad => throw new IllegalStateException(
-              s"unparseable #filestat entry '${bad.mkString(":")}' in v$v")
-          }
-        }.toMap
-        parts.head -> stats
-      }.toMap
+    manifest(spark, dir, v).stats
 
   /** Range read with manifest-stats file skipping: rows of `column` in
     * [lo, hi], scanning ONLY files whose recorded [min,max] intersects
@@ -554,12 +472,9 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
     * the residual filter still guarantees exactness. */
   def readFilterSql(spark: SparkSession, dir: String, predicate: String,
       version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot under $dir")
-    val v = version.getOrElse(vs.last)
-    val schema = schemaOf(spark, dir, v)
+    val (v, m) = versionAt(spark, dir, version)
     val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
-    readFilterCnf(spark, dir, cnfProbes(parsed, schema), version,
+    readFilterCnf(spark, dir, v, m, cnfProbes(parsed, m.schema),
       expr(predicate))
   }
 
@@ -712,7 +627,8 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
       case Probe.NotNull(c)  => col(c).isNotNull
     }.reduce(_ && _))
     // a plain conjunction is the 1-disjunct-per-conjunct CNF
-    readFilterCnf(spark, dir, probes.map(p => Seq(Seq(p))), version, pred)
+    val (v, m) = versionAt(spark, dir, version)
+    readFilterCnf(spark, dir, v, m, probes.map(p => Seq(Seq(p))), pred)
   }
 
   /** Pruning core over a conjunction of disjunctions of probe
@@ -722,27 +638,22 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
     * conjunct; `residualPred` applies in full, so the result is exact
     * regardless of what pruned. */
   private[sources] def readFilterCnf(spark: SparkSession, dir: String,
-      cnf0: Seq[Seq[Seq[Probe]]], version: Option[Long],
+      v: Long, m: Manifest, cnf: Seq[Seq[Seq[Probe]]],
       residualPred: Column): (DataFrame, Int, Int) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot under $dir")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v of $dir does not exist (have ${vs.mkString(",")})")
-    val schema = schemaOf(spark, dir, v)
-    val files = filesOf(spark, dir, v)
-    val kept = pruneFilesCnf(spark, dir, v, cnf0)
-    val pred = residualPred
-    val df =
-      if (kept.nonEmpty) readFiles(spark, dir, v, kept).filter(pred)
-      else schema match {
-        // every file pruned: an empty frame with the version's schema
-        case Some(s) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-        case None => read(spark, dir, Some(v)).filter(pred).limit(0)
-      }
-    (df, kept.size, files.size)
+    val kept = pruneFilesCnf(spark, dir, v, m, cnf)
+    (readKept(spark, dir, v, m, kept, residualPred), kept.size, m.files.size)
   }
+
+  /** `kept` files of version `v` filtered by `pred` — when every file
+    * was pruned, an empty frame with the version's schema. */
+  private[sources] def readKept(spark: SparkSession, dir: String, v: Long,
+      m: Manifest, kept: Seq[String], pred: Column): DataFrame =
+    if (kept.nonEmpty) readFiles(spark, dir, m, kept).filter(pred)
+    else m.schema match {
+      case Some(s) => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+      case None => readAt(spark, dir, v, m).filter(pred).limit(0)
+    }
 
   /** The manifest-grain KEEP decision alone: the subset of version `v`'s
     * files some row of which COULD satisfy the CNF (zone maps ∧ bloom
@@ -751,10 +662,10 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
     * what the rewriting verbs use to pre-prune their affected-file
     * detection scans. */
   private[graft] def pruneFilesCnf(spark: SparkSession, dir: String,
-      v: Long, cnf0: Seq[Seq[Seq[Probe]]]): Seq[String] = {
-    val files = filesOf(spark, dir, v)
-    val stats = fileStatsLogicalOf(spark, dir, v) // probes use logical names
-    val schema = schemaOf(spark, dir, v)
+      v: Long, m: Manifest, cnf0: Seq[Seq[Seq[Probe]]]): Seq[String] = {
+    val files = m.files
+    val stats = m.logicalStats // probes use logical names
+    val schema = m.schema
     // canonicalize probe columns to their DECLARED names under the
     // session resolver (case-insensitive by default): stat, bloom and
     // partition lookups key on the declared name, and a case-mismatched
@@ -771,9 +682,8 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
       }
     }))
     val flatProbes = cnf.flatten.flatten
-    val pcs = partitionColsOf(spark, dir, v)
-    val parts = if (flatProbes.exists(pr => pcs.contains(pr.column)))
-      filePartsOf(spark, dir, v) else Map.empty[String, Map[String, String]]
+    val pcs = m.partitionCols
+    val parts = m.fileParts
     // bloom sidecars participate only for IN probes (point-set skipping,
     // the readPoint rule set-wise) — one sidecar read, filtered to the
     // probed columns
@@ -950,6 +860,10 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
     * all files, never fails the verb. */
   private[graft] def detectionCandidates(spark: SparkSession, dir: String,
       v: Long, pred: Column): Seq[String] =
+    detectionCandidates(spark, dir, v, manifest(spark, dir, v), pred)
+
+  private[sources] def detectionCandidates(spark: SparkSession, dir: String,
+      v: Long, m: Manifest, pred: Column): Seq[String] =
     try {
       import org.apache.spark.sql.catalyst.{expressions => ce}
       import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
@@ -978,10 +892,10 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
               case _                       => f
             }
         }
-      val cnf = cnfProbes(e, schemaOf(spark, dir, v))
+      val cnf = cnfProbes(e, m.schema)
       // nothing prunable anywhere → skip the stat parse entirely
-      if (cnf.forall(_.exists(_.isEmpty))) filesOf(spark, dir, v)
-      else pruneFilesCnf(spark, dir, v, cnf)
+      if (cnf.forall(_.exists(_.isEmpty))) m.files
+      else pruneFilesCnf(spark, dir, v, m, cnf)
     } catch {
       case scala.util.control.NonFatal(e) =>
         // conservative fallback is CORRECT (full detection scan), but a
@@ -990,11 +904,11 @@ private[sources] trait SnapshotStats { this: SnapshotLog.type =>
         logWarning("detectionCandidates: probe lowering failed for " +
           s"$dir v$v — falling back to full detection scan " +
           s"(${e.getClass.getSimpleName}: ${e.getMessage})")
-        filesOf(spark, dir, v)
+        m.files
     }
 }
 
-/** Per-file column statistic: the decoded `#filestat=` bound pair. `lo`
+/** Per-file column statistic: one decoded zone-map bound pair. `lo`
   * and `hi` for [[LongStat]] are the column's exact min/max in its
   * long-encoded stat domain; for [[StrStat]], `lo` is the (possibly
   * truncated) minimum (a UTF-8 prefix is ≤ the full string, so always a

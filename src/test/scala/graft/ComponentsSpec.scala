@@ -92,6 +92,22 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     assert(got === (0 to 5).map(i => s"n${('a' + i).toChar}" -> "na").toMap)
   }
 
+  test("fractional decimal ids: the changed-row probe catches a round whose " +
+      "only change rounds to the same sum (5.4 -> 4.6)") {
+    import spark.implicits._
+    // after the label build, round 1's only change is 5.4 -> 4.6; both
+    // round to 5 under the sum probe's DECIMAL(38,0) cast, so the sum
+    // probe would stop there and leave 6 and 5.4 labelled 5.4
+    val dt = org.apache.spark.sql.types.DecimalType(10, 1)
+    val ids = Seq("6", "5.4", "8", "27", "4.6", "25")
+    val edges = Components.symmetrize(ids.zip(ids.tail).toDF("a", "b")
+      .select(col("a").cast(dt).as("a"), col("b").cast(dt).as("b")), "a", "b")
+    val got = Components.connectedComponents(edges).collect()
+      .map(r => r.getDecimal(0).toPlainString -> r.getDecimal(1).toPlainString)
+      .toMap
+    assert(got === ids.map(i => BigDecimal(i).setScale(1).toString -> "4.6").toMap)
+  }
+
   test("q_dedup_components matches a driver-side union-find on the same edges") {
     val out = graft.ops.CurateOps.dedupComponents.fn(spark, Sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -1,46 +1,12 @@
 package graft
 
-import graft.functions.CentroidAgg
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Typed UDAF verification: the Aggregator-based centroid must agree with
-  * the exact posexplode-based means (the q_sim_centroid oracle path).
-  * Merge order varies across partitions, so equality is to 1e-9 — float
-  * inputs make that bound generous by ~6 orders of magnitude. */
+/** Typed UDAF verification: the bounded top-k aggregators must agree
+  * row-for-row with their window-function twins under any partitioning
+  * (merge order varies across partitions). */
 class FunctionsSpec extends AnyFunSuite with SparkFixture {
-
-  test("CentroidAgg matches the exact per-dimension means") {
-    val centroid = udaf(CentroidAgg)
-    val e = Tables.embeddings(spark, Sf)
-
-    val viaUdaf = e.groupBy("label")
-      .agg(centroid(col("embedding")).as("c"))
-      .select(col("label"), posexplode(col("c")).as(Seq("pos0", "mean_udaf")))
-      .select(col("label"), (col("pos0") + 1).as("pos"), col("mean_udaf"))
-
-    val exact = e
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "val")))
-      .select(col("label"), (col("pos0") + 1).as("pos"), col("val"))
-      .groupBy("label", "pos")
-      .agg((sum(col("val").cast(DoubleType)) / count(lit(1))).as("mean_exact"))
-
-    val diff = viaUdaf.join(exact, Seq("label", "pos"))
-      .filter(abs(col("mean_udaf") - col("mean_exact")) > 1e-9)
-    assert(diff.count() === 0)
-    assert(viaUdaf.count() === 10 * 64)
-  }
-
-  test("CentroidAgg survives repartitioning (merge path)") {
-    val centroid = udaf(CentroidAgg)
-    def run(parts: Int) =
-      Tables.embeddings(spark, Sf).repartition(parts)
-        .groupBy("label").agg(centroid(col("embedding")).as("c"))
-        .select(col("label"), expr("round(aggregate(c, 0D, (a, x) -> a + x*x), 8)").as("ss"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(run(2) === run(11))
-  }
 
   test("TopKAgg reproduces the window top-k row-for-row, under any partitioning") {
     val windowRows = graft.ops.WindowOps.topkPerGroup.fn(spark, Sf).collect()
