@@ -16,12 +16,11 @@ import org.apache.spark.sql.functions._
   * any real metastore/manifest catalog never re-pays. Only the LAZY
   * DataFrame (logical plan + file index) is cached — never data, never
   * results: every action still scans the parquet inputs. The memo is
-  * keyed PER SESSION (weak keys, bounded session count) so plans never
-  * cross sessions and two concurrently-live sessions (parallel suites,
-  * streaming clones) can never invalidate each other's entries — the
-  * r15 single-slot design cleared the whole memo on every session
-  * alternation, which made concurrent sessions thrash and was the prime
-  * suspect for a parallel-suite flake.
+  * keyed PER SESSION (by session UUID) so plans never cross sessions,
+  * and it keeps the [[MaxSessions]] most recently used sessions: a new
+  * session evicts only the least recently used one, so concurrently-live
+  * sessions (parallel suites, streaming clones) never wipe each other's
+  * entries.
   *
   * CONTRACT: table directories under `dir` are immutable for the life
   * of the session — the memo pins the resolved file listing on first
@@ -31,23 +30,19 @@ import org.apache.spark.sql.functions._
   * own temp roots).
   */
 object Tables {
-  // weak keys: a dropped session's plans become collectable with it.
-  // A DataFrame value does reference its own session (key), which would
-  // pin the entry; the size bound below caps that at a handful of
-  // logical plans — never data — and clears wholesale past the bound.
-  private val memos = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private type Memo = java.util.concurrent.ConcurrentHashMap[String, DataFrame]
   private val MaxSessions = 4
+  // access-ordered: the eldest entry is the least recently used session
+  private val memos = new java.util.LinkedHashMap[String, Memo](8, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, Memo]): Boolean = size() > MaxSessions
+  }
 
   private def read(s: SparkSession, dir: String, name: String): DataFrame = {
     val m = memos.synchronized {
-      var mm = memos.get(s)
-      if (mm == null) {
-        if (memos.size >= MaxSessions) memos.clear()
-        mm = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        memos.put(s, mm)
-      }
-      mm
+      memos.computeIfAbsent(
+        org.apache.spark.sql.graftshim.ColumnBridge.sessionUUID(s),
+        _ => new Memo())
     }
     m.computeIfAbsent(s"$dir/$name.parquet", p => s.read.parquet(p))
   }

@@ -72,7 +72,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(s => new graft.plans.SqlDml.ResolveDml(s))
     // batch SELECTs over snapshot/catalog tables re-plan onto Spark's
     // vectorized parquet file scan (manifest file list, DV applied);
-    // the Group reader stays the streaming-feed engine
+    // streams keep the DSv2 micro-batch scan
     ext.injectOptimizerRule(s => new graft.plans.SnapshotBatchRead(s))
     // SQL TABLE functions over the snapshot log — time travel and table
     // history from pure SQL clients (Thrift/Connect), no Scala API

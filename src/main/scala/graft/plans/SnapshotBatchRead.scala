@@ -8,14 +8,15 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.sources.{SnapshotLog, SnapshotStreamTable}
 
-/** Vectorized BATCH reads for snapshot/catalog tables.
+/** File-scan BATCH reads for snapshot/catalog tables.
   *
-  * The DSv2 table's own batch scan decodes rows one at a time through
-  * the parquet Group API — the right engine for a micro-batch FEED
-  * (tiny per-trigger file sets, per-file deletion-vector composition,
-  * version-pinned admission), but the wrong one for `SELECT *` over a
-  * large catalog table: no vectorization, no whole-stage codegen input
-  * batches, no parquet filter pushdown.
+  * The DSv2 table's own batch scan hands rows one file per input
+  * partition through Spark's parquet partition reader — the right shape
+  * for a micro-batch FEED (tiny per-trigger file sets, per-file
+  * deletion-vector composition, version-pinned admission), but the
+  * wrong one for `SELECT *` over a large catalog table: no columnar
+  * batches into whole-stage codegen, no parquet filter pushdown, no
+  * partition pruning, no size statistics.
   *
   * This optimizer rule substitutes every batch [[DataSourceV2Relation]]
   * over a [[SnapshotStreamTable]] with the library's own read plan for
@@ -30,21 +31,15 @@ import graft.sources.{SnapshotLog, SnapshotStreamTable}
   * AQE statistics from real file sizes.
   *
   * What it deliberately does NOT touch:
-  *  - STREAMING relations (`readStream`) — the Group feed path keeps
+  *  - STREAMING relations (`readStream`) — the micro-batch stream keeps
   *    its versions-as-offsets exactly-once contract;
   *  - `DELETE FROM` targets — `SupportsDelete` needs the v2 relation;
   *  - relations whose version has no committed files (declared-empty),
   *    or output columns the substituted plan cannot re-bind — those
-  *    keep the v2 scan (correct, just row-based).
-  *
-  * Kill switch: `spark.graft.batchRead.vectorized=false` restores the
-  * Group scan everywhere (the parity spec runs both ways). */
+  *    keep the v2 scan (correct, just row-based). */
 class SnapshotBatchRead(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!spark.conf.get("spark.graft.batchRead.vectorized", "true")
-        .toBoolean) plan
-    else rewrite(plan)
+  override def apply(plan: LogicalPlan): LogicalPlan = rewrite(plan)
 
   private def rewrite(p: LogicalPlan): LogicalPlan = p match {
     // the DELETE target must stay a DSv2 relation: canDeleteWhere /

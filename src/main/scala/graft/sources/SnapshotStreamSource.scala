@@ -1,17 +1,19 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, JoinedRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource-v2 table over a snapshot-log directory — BOTH halves of
   * the read surface behind one format string:
@@ -63,17 +65,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    is on; a rewrite that ran without it still refuses loudly). The
   *    replay law: (inserts ∪ postimages) exceptAll (deletes ∪
   *    preimages) over the feed reconstructs the table content.
-  *  - Flat schemas of long / int / short / byte / double / float /
-  *    boolean / string / date / timestamp / decimal columns, plus
-  *    single-level arrays of those element types (the embeddings
-  *    corpus is array<float>) — the readers decode parquet directly on
-  *    executors ([[org.apache.parquet.hadoop.example.GroupReadSupport]],
-  *    public parquet-hadoop API) without a nested SparkSession.
+  *  - Every column type Spark's parquet reader decodes — the same
+  *    coverage as the batch read (maps, structs, binary, nested
+  *    arrays included): executors read each file through Spark's own
+  *    parquet partition reader ([[SnapshotFileReaderFactory]]), the
+  *    engine the batch path runs on.
   *  - Hive-partitioned tables ARE supported: each file's partition
   *    tuple ships with its input partition (from the manifest — never
-  *    re-parsed from paths on executors) and the reader fills the
-  *    partition columns as constants, decoded under the declared type
-  *    (string / integral / date partition columns).
+  *    re-parsed from paths on executors) as typed constants, cast from
+  *    the recorded string to the declared column type.
   *
   * Backpressure: `.option("maxVersionsPerTrigger", n)` caps each batch
   * at n versions (admission control) — a stream starting from v1 of a
@@ -229,12 +229,11 @@ private[sources] object SnapshotStreamSource {
     p
   }
 
-  /** The version's declared schema (default: latest), validated against
-    * the source's scope (decodable types; typed-decodable partition
-    * columns). A table with NO committed versions infers as the empty
-    * schema — the WRITE path needs getTable to succeed on a fresh
-    * directory (Spark infers before deciding read vs write); reads of
-    * such a table still fail loudly, at scan planning / stream start. */
+  /** The version's declared schema (default: latest). A table with NO
+    * committed versions infers as the empty schema — the WRITE path
+    * needs getTable to succeed on a fresh directory (Spark infers before
+    * deciding read vs write); reads of such a table still fail loudly,
+    * at scan planning / stream start. */
   def schemaFor(dir: String, version: Option[Long] = None): StructType = {
     val spark = SparkSession.active
     val vs = SnapshotLog.versions(spark, dir)
@@ -243,38 +242,14 @@ private[sources] object SnapshotStreamSource {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v),
       s"version $v of $dir does not exist (have ${vs.mkString(",")})")
-    val schema = SnapshotLog.schemaOf(spark, dir, v).getOrElse(
+    SnapshotLog.schemaOf(spark, dir, v).getOrElse(
       throw new IllegalArgumentException(
         s"$dir has no #schema header — the DSv2 table needs a declared schema"))
-    schema.fields.foreach { f =>
-      require(decodable(f.dataType),
-        s"streaming source supports long/int/short/byte/double/float/" +
-          s"boolean/string/date/timestamp/decimal columns and " +
-          s"single-level arrays of those; '${f.name}' is " +
-          f.dataType.simpleString)
-    }
-    SnapshotLog.partitionColsOf(spark, dir, v).foreach { c =>
-      require(partDecodable(schema(c).dataType),
-        s"streaming source supports string/integral/date PARTITION " +
-          s"columns; '$c' is ${schema(c).dataType.simpleString}")
-    }
-    schema
   }
 
-  def partDecodable(dt: DataType): Boolean = dt match {
-    case StringType | LongType | IntegerType | ShortType | ByteType |
-         DateType => true
-    case _ => false
-  }
-
-  def decodable(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType | DoubleType |
-         FloatType | BooleanType | StringType | DateType |
-         TimestampType | TimestampNTZType => true
-    case _: DecimalType => true
-    case ArrayType(et, _) if !et.isInstanceOf[ArrayType] => decodable(et)
-    case _ => false
-  }
+  /** The CDF columns no file stores: every row of a change-feed stream
+    * carries them as constants of its file. */
+  val CommitColumns = Set("_commit_version", "_commit_timestamp")
 
   /** `schema` with fields under their PHYSICAL (storage) names per the
     * column mapping — what the executor-side readers resolve footers
@@ -354,32 +329,23 @@ private[graft] class SnapshotStreamTable(schema0: StructType,
   * per-file bitmaps shipped inside the partitions. */
 private[sources] class SnapshotBatch(dir: String, schema: StructType,
     versionAsOf: Option[Long]) extends Batch {
+  private def spark = SparkSession.active
+  private lazy val m = SnapshotLog.versionAt(spark, dir, versionAsOf)._2
+  // the pruned schema under PHYSICAL names: the executor reader resolves
+  // footer fields by name, and renamed columns keep their storage name
+  // (partition columns are un-renameable, so tuple keys stay literal)
+  private lazy val phys = SnapshotStreamSource.physicalFields(m.colmap, schema)
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val vs = SnapshotLog.versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot under $dir")
-    val v = versionAsOf.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"version $v of $dir does not exist (have ${vs.mkString(",")})")
-    val files = SnapshotLog.filesOf(spark, dir, v)
-    val parts = if (SnapshotLog.partitionColsOf(spark, dir, v).nonEmpty)
-      SnapshotLog.filePartsOf(spark, dir, v)
-    else Map.empty[String, Map[String, String]]
-    val dvs = SnapshotLog.dvBitmapsOf(spark, dir, v)
-    // ship the pruned schema under PHYSICAL names: the executor reader
-    // resolves footer fields by name, rows are positional, and renamed
-    // columns keep their storage name (partition-tuple keys are
-    // un-renameable, so partConsts lookups stay literal)
-    val phys = SnapshotStreamSource
-      .physicalFields(SnapshotLog.colmapOf(spark, dir, v), schema)
-    files.map { p =>
-      SnapshotFilePartition(p, phys.json,
-        parts.getOrElse(p, Map.empty[String, String]),
+    val dvs = SnapshotLog.dvBitmaps(spark, dir, m)
+    m.files.map { p =>
+      SnapshotFilePartition(p, phys,
+        SnapshotFilePartition.partValues(m, p),
         dvs.get(new Path(p).toUri.getPath)): InputPartition
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotFileReaderFactory
+    SnapshotFileReaderFactory(spark, phys, phys)
 }
 
 /** A stream position: "everything up to and including version v".
@@ -455,22 +421,22 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
   @volatile private var snapshotCache: Option[(Long, Seq[String])] = None
   @volatile private var snapshotSizes: Option[(Long, Array[Long])] = None
 
-  private def snapshotFilesOf(v: Long): Seq[String] =
+  private def snapshotFilesOf(v: Long, m: Long => Manifest): Seq[String] =
     snapshotCache match {
       case Some((cv, fs)) if cv == v => fs
       case _ =>
-        val fs = SnapshotLog.filesOf(spark, dir, v)
+        val fs = m(v).files
         snapshotCache = Some((v, fs))
         fs
     }
 
-  private def snapshotSizesOf(v: Long): Array[Long] =
+  private def snapshotSizesOf(v: Long, m: Long => Manifest): Array[Long] =
     snapshotSizes match {
       case Some((cv, sz)) if cv == v => sz
       case _ =>
         val f = new Path(dir)
           .getFileSystem(spark.sessionState.newHadoopConf())
-        val sz = snapshotFilesOf(v)
+        val sz = snapshotFilesOf(v, m)
           .map(p => f.getFileStatus(new Path(p)).getLen).toArray
         snapshotSizes = Some((v, sz))
         sz
@@ -493,18 +459,24 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
         "silently skip the snapshot's un-emitted files; restart the " +
         "stream from a retained version")
 
+  /** Manifests by version, each read at most once per planning call
+    * (a version range reads every version and its predecessor). */
+  private def manifests(): Long => Manifest = {
+    val read = scala.collection.mutable.Map[Long, Manifest]()
+    v => read.getOrElseUpdate(v, SnapshotLog.manifest(spark, dir, v))
+  }
+
   /** Bytes version `v` would ADD to the stream: sizes of its files not
     * carried from `v-1` (for the stream's initial snapshot, every
     * file). Driver-side `getFileStatus` over the NEW files only — the
     * same listing class FileStreamSource pays per trigger. */
-  private def newFileBytes(vs: Set[Long], v: Long): Long = {
+  private def newFileBytes(vs: Set[Long], v: Long,
+      m: Long => Manifest): Long = {
     def norm(p: String): String = new Path(p).toUri.getPath
     val prevSet =
-      if (vs.contains(v - 1))
-        SnapshotLog.filesOf(spark, dir, v - 1).map(norm).toSet
+      if (vs.contains(v - 1)) m(v - 1).files.map(norm).toSet
       else Set.empty[String]
-    val fresh = SnapshotLog.filesOf(spark, dir, v)
-      .filterNot(p => prevSet.contains(norm(p)))
+    val fresh = m(v).files.filterNot(p => prevSet.contains(norm(p)))
     if (fresh.isEmpty) 0L
     else {
       val f = new Path(dir)
@@ -551,6 +523,7 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
     // one-bite snapshot) or when resuming an in-flight file cursor
     // (the budget option may have been dropped across the restart)
     val vset = vs.toSet
+    val m = manifests()
     val midSnapshot = so.v == so.start && so.files >= 0
     requireSnapshotRetained(so, vset)
     val snapshotPhase =
@@ -562,13 +535,13 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
     // the same batch, exactly like any other admitted version)
     var snapBytes = 0L
     if (snapshotPhase) {
-      val files = snapshotFilesOf(so.start)
+      val files = snapshotFilesOf(so.start, m)
       val from = if (so.v < so.start) 0L else so.files
       maxBytesPerTrigger match {
         case None => // budget dropped across a restart: finish in one bite
           return VersionOffset(so.start, so.start)
         case Some(budget) =>
-          val sizes = snapshotSizesOf(so.start)
+          val sizes = snapshotSizesOf(so.start, m)
           var i = from
           // the first pending file always rides (a single fat file is
           // admitted alone rather than wedging the stream)
@@ -606,7 +579,7 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
           // admission must not die on a raw manifest-open error;
           // planInputPartitions raises the GUIDED replay-gap message
           // for the same range
-          if (vset.contains(v)) bytes += newFileBytes(vset, v)
+          if (vset.contains(v)) bytes += newFileBytes(vset, v, m)
         }
         v
     }
@@ -619,16 +592,46 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
   override def deserializeOffset(json: String): Offset =
     VersionOffset.parse(json)
 
+  /** The last planned range with its partitions and physical read
+    * schema: Spark plans one batch's scan several times (six times for
+    * an AvailableNow catch-up batch), and a range's manifests are
+    * immutable, so each range is planned once. */
+  @volatile private var planned: Option[((VersionOffset, VersionOffset),
+    (Array[InputPartition], StructType))] = None
+
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
-    val so = start.asInstanceOf[VersionOffset]
-    val eo = end.asInstanceOf[VersionOffset]
+    val range = (start.asInstanceOf[VersionOffset],
+      end.asInstanceOf[VersionOffset])
+    planned.collect { case (r, p) if r == range => p }.getOrElse {
+      val p = plan(range._1, range._2)
+      planned = Some(range -> p)
+      p
+    }._1
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val phys = planned.map(_._2._2).getOrElse(SnapshotStreamSource
+      .physicalFields(SnapshotLog.tip(spark, dir)._2.colmap, schema))
+    // the commit columns exist only as constants; `_change_type` is
+    // stored in recorded change files
+    SnapshotFileReaderFactory(spark, phys, StructType(phys.filterNot(f =>
+      changeFeed && SnapshotStreamSource.CommitColumns.contains(f.name))))
+  }
+
+  /** The range's input partitions and the physical schema to read them
+    * under. */
+  private def plan(so: VersionOffset,
+      eo: VersionOffset): (Array[InputPartition], StructType) = {
     val (s, e) = (so.v, eo.v)
-    if (Ordering[(Long, Long)].lteq(eo.pos, so.pos)) return Array.empty
+    // an empty range reads no file, so any read schema serves
+    if (Ordering[(Long, Long)].lteq(eo.pos, so.pos))
+      return (Array.empty, schema)
     val vs = SnapshotLog.versions(spark, dir)
     val vset = vs.toSet // O(1) membership across the whole version range
+    val m = manifests()
     val newFiles = scala.collection.mutable
-      .ArrayBuffer[(String, Map[String, String], Long)]()
+      .ArrayBuffer[(String, Seq[(String, Literal)], Long)]()
     // The GENUINE initial snapshot (stream start with no retained
     // predecessor) plans as a slice of the start version's manifest:
     // the whole list in one batch without a byte budget, or the
@@ -647,7 +650,7 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
       if (genuineSnapshot &&
           (so.v < so.start || (so.v == so.start && so.files >= 0)) &&
           eo.v >= so.start) {
-        val total = snapshotFilesOf(so.start).length
+        val total = snapshotFilesOf(so.start, m).length
         val from = if (so.v < so.start) 0 else so.files.toInt
         val until = if (eo.v == so.start && eo.files >= 0) eo.files.toInt
           else total
@@ -655,16 +658,12 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
       } else None
     slice.foreach { case (from, until) =>
       val v = so.start
-      require(SnapshotLog.dvOf(spark, dir, v).isEmpty,
+      require(m(v).dv.isEmpty,
         s"version $v of $dir (the stream's initial snapshot) carries a " +
           "deletion vector — MoR positions cannot be applied by an " +
           "append-only stream; compact (optimize) first")
-      val files = snapshotFilesOf(v)
-      val parts = if (SnapshotLog.partitionColsOf(spark, dir, v).nonEmpty)
-        SnapshotLog.filePartsOf(spark, dir, v)
-      else Map.empty[String, Map[String, String]]
-      newFiles ++= files.slice(from, until)
-        .map(p => (p, parts.getOrElse(p, Map.empty[String, String]), v))
+      newFiles ++= snapshotFilesOf(v, m).slice(from, until)
+        .map(p => (p, SnapshotFilePartition.partValues(m(v), p), v))
     }
     // RECORDED change files ([[SnapshotLog.ChangeFeedProperty]]): the
     // commit's exact row-level rows, `_change_type` materialized inside
@@ -684,13 +683,13 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
       // (no predecessor — handled by the slice above) is full state.
       val recorded =
         if (changeFeed && (v != so.start || vset.contains(v - 1)))
-          SnapshotLog.changeFilesOf(spark, dir, v)
+          m(v).changeFiles
         else None
       if (recorded.isDefined) { recordedFiles ++= recorded.get.map(_ -> v) }
       else {
-      val files = SnapshotLog.filesOf(spark, dir, v)
+      val files = m(v).files
       val prev: Seq[String] =
-        if (vset.contains(v - 1)) SnapshotLog.filesOf(spark, dir, v - 1)
+        if (vset.contains(v - 1)) m(v - 1).files
         else if (v == so.start) Seq.empty // the stream's initial snapshot
         else throw new IllegalStateException(
           s"version ${v - 1} of $dir (the predecessor of streamed " +
@@ -715,292 +714,137 @@ private[sources] class SnapshotMicroBatchStream(dir: String,
       require(removed.isEmpty,
         s"version $v of $dir removed/rewrote ${removed.size} file(s) — " +
           cdfHint)
-      require(SnapshotLog.dvOf(spark, dir, v) ==
-        (if (vset.contains(v - 1)) SnapshotLog.dvOf(spark, dir, v - 1)
-         else None),
+      require(m(v).dv == (if (vset.contains(v - 1)) m(v - 1).dv else None),
         s"version $v of $dir changed its deletion vector — MoR deletes " +
           s"retract emitted rows; $cdfHint")
       // partition tuples ride with the files (from the MANIFEST — never
       // re-parsed from paths on executors); readers fill the partition
       // columns as typed constants
-      val parts = if (SnapshotLog.partitionColsOf(spark, dir, v).nonEmpty)
-        SnapshotLog.filePartsOf(spark, dir, v)
-      else Map.empty[String, Map[String, String]]
       newFiles ++= files.filterNot(p => prevSet.contains(norm(p)))
-        .map(p => (p, parts.getOrElse(p, Map.empty[String, String]), v))
+        .map(p => (p, SnapshotFilePartition.partValues(m(v), p), v))
       }
     }
     // physical names for footer lookup, via the LATEST colmap: a name
     // this stream bound BEFORE a later rename is already the storage
     // name (identity fallback); a post-rename stream's new name maps —
     // both directions land on the immutable physical name
-    val phys = SnapshotStreamSource.physicalFields(
-      SnapshotLog.colmapOf(spark, dir, vs.last), schema)
-    // CDF mode: plain data files are pure-append rows — the reader
-    // fills `_change_type` ("insert"), `_commit_version` and
-    // `_commit_timestamp` (commit-point micros) as typed constants via
-    // the partition-tuple mechanism; recorded change files carry the
-    // type column for real and version/timestamp as constants
-    def cdfConsts(v: Long): Map[String, String] = Map(
-      "_commit_version" -> v.toString,
-      "_commit_timestamp" ->
-        (SnapshotLog.commitTimeMillis(spark, dir, v) * 1000L).toString)
-    (newFiles.map { case (p, t, v) =>
-      val tuple =
-        if (changeFeed) t ++ cdfConsts(v) + ("_change_type" -> "insert")
+    val phys = SnapshotStreamSource.physicalFields(m(vs.last).colmap, schema)
+    // CDF mode: plain data files are pure-append rows — `_change_type`
+    // ("insert"), `_commit_version` and `_commit_timestamp` (commit-point
+    // micros) ride as typed constants beside the partition values;
+    // recorded change files carry the type column for real and
+    // version/timestamp as constants
+    val cdfConsts = scala.collection.mutable.Map[Long, Seq[(String, Literal)]]()
+    def cdf(v: Long): Seq[(String, Literal)] = cdfConsts.getOrElseUpdate(v,
+      Seq("_commit_version" -> Literal(v),
+        "_commit_timestamp" -> Literal(
+          SnapshotLog.commitTimeMillis(spark, dir, v) * 1000L, TimestampType)))
+    ((newFiles.map { case (p, t, v) =>
+      val consts =
+        if (changeFeed) t ++ cdf(v) :+ ("_change_type" -> Literal("insert"))
         else t
-      SnapshotFilePartition(p, phys.json, tuple, None): InputPartition
+      SnapshotFilePartition(p, phys, consts, None): InputPartition
     } ++ recordedFiles.map { case (p, v) =>
-      SnapshotFilePartition(p, phys.json, cdfConsts(v), None)
-        : InputPartition
-    }).toArray
+      SnapshotFilePartition(p, phys, cdf(v), None): InputPartition
+    }).toArray, phys)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotFileReaderFactory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
+/** One data file of a scan. `consts` holds, typed, the values of the
+  * columns named by `constCols` — hive partition values and the CDF
+  * marker columns, which the file itself does not store; a shipped
+  * `dvBitmap` names the file's deleted row positions. */
 private[sources] final case class SnapshotFilePartition(path: String,
-    schemaJson: String,
-    partTuple: Map[String, String],
+    constCols: Seq[String], consts: InternalRow,
     dvBitmap: Option[Array[Byte]]) extends InputPartition
 
-private[sources] class SnapshotFileReaderFactory
+private[sources] object SnapshotFilePartition {
+  /** `path` completed by `values`, each cast to its column's type in
+    * `schema` (physical names); values of columns `schema` does not
+    * carry (pruned away) are dropped. */
+  def apply(path: String, schema: StructType, values: Seq[(String, Literal)],
+      dvBitmap: Option[Array[Byte]]): SnapshotFilePartition = {
+    val kept = values.filter { case (c, _) => schema.fieldNames.contains(c) }
+    val tz = Some(SQLConf.get.sessionLocalTimeZone)
+    SnapshotFilePartition(path, kept.map(_._1), InternalRow.fromSeq(
+      kept.map { case (c, v) => Cast(v, schema(c).dataType, tz).eval() }),
+      dvBitmap)
+  }
+
+  /** File `p`'s hive partition values in manifest `m`, as recorded
+    * strings (`__HIVE_DEFAULT_PARTITION__` is null). */
+  def partValues(m: Manifest, p: String): Seq[(String, Literal)] =
+    if (m.partitionCols.isEmpty) Seq.empty
+    else m.fileParts.getOrElse(p, Map.empty[String, String]).toSeq.map {
+      case (c, "__HIVE_DEFAULT_PARTITION__") => c -> Literal(null, StringType)
+      case (c, raw)                          => c -> Literal(raw)
+    }
+}
+
+/** The executor side of every snapshot scan: each file is read whole by
+  * Spark's own parquet reader (the vectorized one wherever the schema
+  * allows), under `dataSchema`'s physical names and with no pushed
+  * filters — a column the file lacks reads its frozen EXISTS_DEFAULT, or
+  * null. A partition's constants are joined to the file's columns and
+  * projected into `schema`'s order; a deletion bitmap skips the positions
+  * it names, counting rows in file order. */
+private[sources] class SnapshotFileReaderFactory(schema: StructType,
+    dataSchema: StructType, parquet: PartitionReaderFactory)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SnapshotFilePartition]
-    new GroupFileReader(p.path,
-      DataType.fromJson(p.schemaJson).asInstanceOf[StructType], p.partTuple,
-      p.dvBitmap)
+    val rows = parquet.createReader(FilePartition(0, Array(PartitionedFile(
+      InternalRow.empty, SparkPath.fromPathString(p.path), 0L, Long.MaxValue))))
+    val project: InternalRow => InternalRow =
+      if (p.constCols.isEmpty && dataSchema.length == schema.length) identity
+      else {
+        val proj = UnsafeProjection.create(schema.fields.toSeq.map { f =>
+          val ci = p.constCols.indexOf(f.name)
+          BoundReference(
+            if (ci >= 0) dataSchema.length + ci else dataSchema.fieldIndex(f.name),
+            f.dataType, nullable = true)
+        })
+        val joined = new JoinedRow()
+        r => proj(joined(r, p.consts))
+      }
+    val dv = p.dvBitmap.map(SnapshotLog.rbmFrom)
+    new PartitionReader[InternalRow] {
+      private var pos = -1L
+      override def next(): Boolean = {
+        var more = rows.next()
+        pos += 1
+        while (more && dv.exists(_.contains(pos))) {
+          more = rows.next()
+          pos += 1
+        }
+        more
+      }
+      override def get(): InternalRow = project(rows.get())
+      override def close(): Unit = rows.close()
+    }
   }
 }
 
-/** Executor-side parquet reader: one file → InternalRows through the
-  * PUBLIC parquet-hadoop Group API (no SparkSession on executors).
-  * Column order follows the DECLARED schema; a column missing from the
-  * file reads its PARTITION-tuple constant when the file's manifest
-  * tuple carries one (hive layouts strip partition columns from the
-  * data files), else null (pre-evolution data). Field indexes and
-  * per-column decoders resolve ONCE per file from the projected
-  * message type — the row loop does no name lookups. A deletion-vector
-  * bitmap, when shipped, suppresses tombstoned row positions. */
-private[sources] class GroupFileReader(path: String, schema: StructType,
-    partTuple: Map[String, String] = Map.empty,
-    dvBitmap: Option[Array[Byte]] = None)
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-
-  // typed constants for partition columns, decoded ONCE per file
-  private val partConsts: Map[String, Any] = partTuple.flatMap {
-    case (c, raw) => schema.fields.find(_.name == c).map { f =>
-      c -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null
-        else f.dataType match {
-          case StringType  => UTF8String.fromString(raw)
-          case LongType    => java.lang.Long.parseLong(raw)
-          case IntegerType => java.lang.Integer.parseInt(raw)
-          case ShortType   => java.lang.Short.parseShort(raw)
-          case ByteType    => java.lang.Byte.parseByte(raw)
-          case DateType    =>
-            java.time.LocalDate.parse(raw).toEpochDay.toInt
-          // constant-fill only (the CDF _commit_timestamp): raw is
-          // epoch MICROS, the InternalRow timestamp representation
-          case TimestampType => java.lang.Long.parseLong(raw)
-          case other => throw new IllegalStateException(
-            s"undecodable partition type ${other.simpleString} for '$c'")
-        })
-    }
+private[sources] object SnapshotFileReaderFactory {
+  /** Reads `schema` (physical names); the columns outside `dataSchema`
+    * are constants of every partition. Spark's own parquet scan sets up
+    * the reader's Hadoop and SQL conf (requested schema, time zone,
+    * INT96 and rebase modes); its file index is empty, because the
+    * partitions name the files. Files are read with every column
+    * nullable: a hive file lacks its partition columns, NOT NULL or not,
+    * and the constants fill them. */
+  def apply(spark: SparkSession, schema: StructType,
+      dataSchema: StructType): SnapshotFileReaderFactory = {
+    val read = StructType(dataSchema.map(_.copy(nullable = true)))
+    val scan = ParquetScan(spark, spark.sessionState.newHadoopConf(),
+      new InMemoryFileIndex(spark, Nil, Map.empty, Some(read)),
+      read, read, new StructType(), Array.empty,
+      CaseInsensitiveStringMap.empty())
+    new SnapshotFileReaderFactory(schema, dataSchema,
+      scan.createReaderFactory())
   }
-
-  private val projected: org.apache.parquet.schema.MessageType = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val footer = org.apache.parquet.hadoop.ParquetFileReader
-      .readFooter(conf, new Path(path),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-    val fileSchema = footer.getFileMetaData.getSchema
-    val want = schema.fieldNames.toSet
-    import scala.jdk.CollectionConverters._
-    // parquet-level projection: request only the schema's fields that
-    // exist in THIS file (typed from the file's own footer, so INT96 vs
-    // INT64 timestamps always match) — unrequested column chunks are
-    // never read. An all-partition/pre-evolution projection keeps one
-    // anchor field purely to drive the row count.
-    val fields = fileSchema.getFields.asScala.filter(f => want(f.getName))
-    val anchor = if (fields.nonEmpty) fields
-      else Seq(fileSchema.getFields.get(0))
-    new org.apache.parquet.schema.MessageType(fileSchema.getName,
-      anchor.asJava)
-  }
-
-  private val reader = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projected.toString)
-    org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new Path(path))
-      .withConf(conf)
-      .build()
-  }
-
-  /** A decoder for one primitive value at (fi, 0) of a group, chosen
-    * once from (spark type, parquet primitive). */
-  private def primDecoder(dt: DataType,
-      prim: PrimitiveTypeName, fi: Int): Group => Any = dt match {
-    case LongType    => g => g.getLong(fi, 0)
-    case IntegerType => g => g.getInteger(fi, 0)
-    case ShortType   => g => g.getInteger(fi, 0).toShort
-    case ByteType    => g => g.getInteger(fi, 0).toByte
-    case DoubleType  => g => g.getDouble(fi, 0)
-    case FloatType   => g => g.getFloat(fi, 0)
-    case BooleanType => g => g.getBoolean(fi, 0)
-    case StringType  => g => UTF8String.fromBytes(g.getBinary(fi, 0).getBytes)
-    case DateType    => g => g.getInteger(fi, 0) // epoch days, as stored
-    case dec: DecimalType => prim match {
-      // parquet physical form tracks precision: INT32 (≤9), INT64
-      // (≤18), fixed/variable binary beyond — decode whichever the
-      // file carries into an unscaled value at the DECLARED scale
-      case PrimitiveTypeName.INT32 =>
-        g => Decimal(g.getInteger(fi, 0).toLong, dec.precision, dec.scale)
-      case PrimitiveTypeName.INT64 =>
-        g => Decimal(g.getLong(fi, 0), dec.precision, dec.scale)
-      case _ =>
-        g => Decimal(BigDecimal(
-          BigInt(new java.math.BigInteger(g.getBinary(fi, 0).getBytes)),
-          dec.scale), dec.precision, dec.scale)
-    }
-    case TimestampType | TimestampNTZType => prim match {
-      // Spark writes INT96 by default (12 bytes: nanos-of-day LE ++
-      // julian-day LE) and TIMESTAMP_MICROS when configured — decode
-      // whichever the file carries
-      case PrimitiveTypeName.INT96 => g => {
-        val b = g.getInt96(fi, 0).getBytes
-        val buf = java.nio.ByteBuffer.wrap(b)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanosOfDay = buf.getLong
-        val julianDay = buf.getInt
-        (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-      }
-      case _ => g => g.getLong(fi, 0) // TIMESTAMP_MICROS
-    }
-    case other => throw new IllegalStateException(
-      s"undecodable type ${other.simpleString}")
-  }
-
-  /** Per-schema-field decoders, resolved ONCE from the projected
-    * message type (missing field → partition constant, the column's
-    * frozen EXISTS_DEFAULT when one is declared — the same fill the
-    * vectorized batch scan applies — else null). */
-  private val decoders: Array[Group => Any] =
-    schema.fields.map { f =>
-      val fi = if (projected.containsField(f.name))
-        projected.getFieldIndex(f.name) else -1
-      if (fi < 0) {
-        if (partConsts.contains(f.name)) {
-          val c = partConsts(f.name); (_: Group) => c
-        } else {
-          // internal-format constant (UTF8String/Int days/Long micros),
-          // resolved ONCE per file — null when no default is declared
-          val d = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-            .getExistenceDefaultValue(f)
-          (_: Group) => d
-        }
-      } else f.dataType match {
-        case ArrayType(et, _) =>
-          // Spark's standard 3-level list: optional group (LIST) {
-          //   repeated group list { optional <elem> element } };
-          // legacy 2-level (repeated <prim> directly) also decodes
-          val listGt = projected.getType(fi).asGroupType()
-          val inner = listGt.getType(0)
-          val threeLevel = !inner.isPrimitive
-          val elemPrim =
-            if (threeLevel)
-              inner.asGroupType().getType(0).asPrimitiveType()
-                .getPrimitiveTypeName
-            else inner.asPrimitiveType().getPrimitiveTypeName
-          val elemDec = primDecoder(et, elemPrim, 0)
-          // both decoders resolve ONCE per file — the element loop is
-          // allocation-free (the 2-level one takes the index at runtime)
-          val legacyDec = if (threeLevel) null else primDecoderAt(et, elemPrim, 0)
-          g => {
-            if (g.getFieldRepetitionCount(fi) == 0) null
-            else {
-              val lg = g.getGroup(fi, 0)
-              val n = lg.getFieldRepetitionCount(0)
-              val arr = new Array[Any](n)
-              var j = 0
-              while (j < n) {
-                arr(j) =
-                  if (threeLevel) {
-                    val eg = lg.getGroup(0, j)
-                    if (eg.getFieldRepetitionCount(0) == 0) null
-                    else elemDec(eg)
-                  } else legacyDec(lg, j)
-                j += 1
-              }
-              new GenericArrayData(arr)
-            }
-          }
-        case dt =>
-          val prim = projected.getType(fi).asPrimitiveType()
-            .getPrimitiveTypeName
-          val dec = primDecoder(dt, prim, fi)
-          g => if (g.getFieldRepetitionCount(fi) == 0) null else dec(g)
-      }
-    }
-
-  /** [[primDecoder]] with the repetition index as a RUNTIME argument
-    * (legacy 2-level lists repeat the primitive directly) — resolved
-    * once per file, so the element loop allocates nothing. */
-  private def primDecoderAt(dt: DataType, prim: PrimitiveTypeName,
-      fi: Int): (Group, Int) => Any = dt match {
-    case LongType    => (g, idx) => g.getLong(fi, idx)
-    case IntegerType => (g, idx) => g.getInteger(fi, idx)
-    case DoubleType  => (g, idx) => g.getDouble(fi, idx)
-    case FloatType   => (g, idx) => g.getFloat(fi, idx)
-    case BooleanType => (g, idx) => g.getBoolean(fi, idx)
-    case StringType  =>
-      (g, idx) => UTF8String.fromBytes(g.getBinary(fi, idx).getBytes)
-    case other => throw new IllegalStateException(
-      s"undecodable legacy-list element ${other.simpleString}")
-  }
-
-  // tombstoned positions of THIS file (batch reads of DV-carrying
-  // versions); row index advances per parquet record read
-  private val dv: Option[org.roaringbitmap.longlong.Roaring64NavigableMap] =
-    dvBitmap.map { bytes =>
-      val bm = new org.roaringbitmap.longlong.Roaring64NavigableMap()
-      bm.deserialize(new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(bytes)))
-      bm
-    }
-  private var rowIdx: Long = -1L
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    rowIdx += 1
-    while (current != null && dv.exists(_.contains(rowIdx))) {
-      current = reader.read()
-      rowIdx += 1
-    }
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      vals(i) = decoders(i)(g)
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  override def close(): Unit = reader.close()
 }

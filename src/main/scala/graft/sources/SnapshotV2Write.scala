@@ -3,14 +3,7 @@ package graft.sources
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
@@ -22,10 +15,7 @@ import org.apache.spark.sql.types._
   *
   * Data never moves through the driver: each task's writer streams its
   * partition straight to a parquet file under `<table>/data/<commitId>/`
-  * — by default through Spark's own InternalRow encoder
-  * ([[InternalRowFileWriter]], no per-value boxing; kill switch
-  * `spark.graft.streamWrite.nativeEncode=false` restores the
-  * [[GroupFileWriter]] example-API twin, byte-layout-compatible) —
+  * through Spark's own InternalRow encoder ([[InternalRowFileWriter]]),
   * and the driver's epoch commit registers the finished file LIST
   * through [[SnapshotLog.appendExternal]] (Append) or
   * [[SnapshotLog.commitBatchExternal]] (Complete) — so CHECK
@@ -45,12 +35,6 @@ private[sources] class SnapshotStreamingWrite(dir: String,
   // one physical layout per query run; epochs disambiguate file names
   private val commitId = UUID.randomUUID().toString
 
-  schema.fields.foreach { f =>
-    require(SnapshotStreamSource.decodable(f.dataType),
-      s"graft-snapshot v2 write supports the source's type scope; " +
-        s"'${f.name}' is ${f.dataType.simpleString}")
-  }
-
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     // ship the SESSION's effective Hadoop conf (s3a credentials, HA HDFS
@@ -66,15 +50,10 @@ private[sources] class SnapshotStreamingWrite(dir: String,
       while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
       b.result()
     }
-    // kill switch (parity-spec'd both ways): false restores the Group
-    // encoder everywhere
-    val native = spark.conf
-      .get("spark.graft.streamWrite.nativeEncode", "true").toBoolean
     // files store PHYSICAL column names (identity on unmapped tables);
     // the epoch commit registers under the LOGICAL schema
     val phys = SnapshotLog.physicalWriteSchema(spark, dir, schema)
-    new GroupWriterFactory(s"$dir/data/$commitId", phys.json, props,
-      native)
+    new FileWriterFactory(s"$dir/data/$commitId", phys.json, props)
   }
 
   override def commit(epochId: Long,
@@ -109,9 +88,8 @@ private[sources] class SnapshotStreamingWrite(dir: String,
 private[sources] case class FilesWritten(paths: Seq[String])
     extends WriterCommitMessage
 
-private[sources] class GroupWriterFactory(dataDir: String,
-    schemaJson: String, confProps: Array[(String, String)],
-    nativeEncode: Boolean = true)
+private[sources] class FileWriterFactory(dataDir: String,
+    schemaJson: String, confProps: Array[(String, String)])
     extends StreamingDataWriterFactory {
   // rebuild the shipped session conf ONCE per deserialized factory —
   // Configuration itself is not serializable
@@ -125,23 +103,18 @@ private[sources] class GroupWriterFactory(dataDir: String,
       epochId: Long): DataWriter[InternalRow] = {
     val path =
       s"$dataDir/part-$epochId-$partitionId-${UUID.randomUUID()}.parquet"
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    if (nativeEncode) new InternalRowFileWriter(path, schema, hadoopConf)
-    else new GroupFileWriter(path, schema, hadoopConf)
+    new InternalRowFileWriter(path,
+      DataType.fromJson(schemaJson).asInstanceOf[StructType], hadoopConf)
   }
 }
 
 /** One task's parquet writer through Spark's OWN row encoder
   * ([[org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport]]
-  * — the engine every native parquet write uses): InternalRow in, no
-  * intermediate Group materialization, per-field codegen'd value
-  * writers resolved once from the schema. This is the throughput twin
-  * of the batch-read fix — the Group example API decodes/encodes one
-  * boxed object per value, the native WriteSupport streams primitives
-  * straight into the column writers. File layout is pinned to the
-  * Group writer's output (standard 3-level lists, INT64 micro
-  * timestamps, INT32/INT64/FIXED decimals by precision, snappy), so
-  * both engines' files interleave freely inside one table. */
+  * — the engine every native parquet write uses): InternalRow in,
+  * per-field value writers resolved once from the schema, every type
+  * Spark's parquet format writes. The physical layout is pinned
+  * independent of session defaults (standard 3-level lists, INT64 micro
+  * timestamps, INT32/INT64/FIXED decimals by precision, snappy). */
 private[sources] class InternalRowFileWriter(path: String,
     schema: StructType, baseConf: org.apache.hadoop.conf.Configuration)
     extends DataWriter[InternalRow] {
@@ -150,9 +123,9 @@ private[sources] class InternalRowFileWriter(path: String,
   private val writer = {
     val conf = new org.apache.hadoop.conf.Configuration(baseConf)
     ParquetWriteSupport.setSchema(schema, conf)
-    // pin the physical layout the Group writer produces, independent of
-    // session defaults: modern list/timestamp encodings, no rebase
-    // (micros since epoch are written as stored)
+    // pin the physical layout, independent of session defaults: modern
+    // list/timestamp encodings, no rebase (micros since epoch are
+    // written as stored)
     conf.set("spark.sql.parquet.writeLegacyFormat", "false")
     conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
@@ -200,180 +173,4 @@ private[sources] object InternalRowFileWriter {
       new org.apache.spark.sql.execution.datasources.parquet
         .ParquetWriteSupport()
   }
-}
-
-/** One task's parquet writer: InternalRow → example-API Group →
-  * columnar pages, streaming (bounded memory per row group). Encoders
-  * resolve ONCE per (field, type) — the hot loop is array-indexed. */
-private[sources] class GroupFileWriter(path: String, schema: StructType,
-    baseConf: org.apache.hadoop.conf.Configuration)
-    extends DataWriter[InternalRow] {
-  private val message = GroupFileWriter.toMessageType(schema)
-  private val factory = new SimpleGroupFactory(message)
-  private val writer = {
-    // copy: setSchema mutates, and the factory's conf is shared
-    val conf = new org.apache.hadoop.conf.Configuration(baseConf)
-    GroupWriteSupport.setSchema(message, conf)
-    ExampleParquetWriter.builder(new Path(path))
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-  }
-
-  private val encoders: Array[(InternalRow, Group) => Unit] =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      GroupFileWriter.encoder(f.dataType, i)
-    }
-
-  override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < encoders.length) {
-      if (!row.isNullAt(i)) encoders(i)(row, g)
-      i += 1
-    }
-    writer.write(g)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    FilesWritten(Seq(path))
-  }
-
-  override def abort(): Unit = {
-    try writer.close() catch { case _: Exception => () }
-    val hp = new Path(path)
-    hp.getFileSystem(baseConf).delete(hp, false)
-    ()
-  }
-
-  override def close(): Unit = ()
-}
-
-private[sources] object GroupFileWriter {
-  import LogicalTypeAnnotation._
-
-  /** Smallest FIXED_LEN_BYTE_ARRAY length whose signed range holds
-    * 10^precision − 1 (the standard parquet decimal sizing). */
-  def minBytesForPrecision(p: Int): Int = {
-    var n = 1
-    while (BigInt(2).pow(8 * n - 1) - 1 < BigInt(10).pow(p) - 1) n += 1
-    n
-  }
-
-  def toMessageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(field(f.name, f.dataType,
-      f.nullable)))
-    b.named("spark_schema")
-  }
-
-  private def field(name: String, dt: DataType,
-      nullable: Boolean): Type = {
-    val rep = if (nullable) Repetition.OPTIONAL else Repetition.REQUIRED
-    dt match {
-      case ArrayType(et, containsNull) =>
-        // Spark's standard 3-level list layout — what both our reader
-        // and spark.read.parquet expect
-        Types.buildGroup(rep).as(listType())
-          .addField(Types.repeatedGroup()
-            .addField(field("element", et, containsNull))
-            .named("list"))
-          .named(name)
-      case LongType    => Types.primitive(INT64, rep).named(name)
-      case IntegerType => Types.primitive(INT32, rep).named(name)
-      case ShortType =>
-        Types.primitive(INT32, rep).as(intType(16, true)).named(name)
-      case ByteType =>
-        Types.primitive(INT32, rep).as(intType(8, true)).named(name)
-      case DoubleType  => Types.primitive(DOUBLE, rep).named(name)
-      case FloatType   => Types.primitive(FLOAT, rep).named(name)
-      case BooleanType => Types.primitive(BOOLEAN, rep).named(name)
-      case StringType =>
-        Types.primitive(BINARY, rep).as(stringType()).named(name)
-      case DateType =>
-        Types.primitive(INT32, rep).as(dateType()).named(name)
-      case TimestampType =>
-        Types.primitive(INT64, rep)
-          .as(timestampType(true, TimeUnit.MICROS)).named(name)
-      case TimestampNTZType =>
-        Types.primitive(INT64, rep)
-          .as(timestampType(false, TimeUnit.MICROS)).named(name)
-      case d: DecimalType if d.precision <= 9 =>
-        Types.primitive(INT32, rep)
-          .as(decimalType(d.scale, d.precision)).named(name)
-      case d: DecimalType if d.precision <= 18 =>
-        Types.primitive(INT64, rep)
-          .as(decimalType(d.scale, d.precision)).named(name)
-      case d: DecimalType =>
-        Types.primitive(FIXED_LEN_BYTE_ARRAY, rep)
-          .length(minBytesForPrecision(d.precision))
-          .as(decimalType(d.scale, d.precision)).named(name)
-      case other => throw new IllegalArgumentException(
-        s"unencodable type ${other.simpleString} for '$name'")
-    }
-  }
-
-  /** Sign-extended big-endian fixed-width unscaled decimal bytes. */
-  private def fixedDecimal(d: org.apache.spark.sql.types.Decimal,
-      width: Int): Array[Byte] = {
-    val raw = d.toJavaBigDecimal.unscaledValue().toByteArray
-    if (raw.length == width) raw
-    else {
-      val out = new Array[Byte](width)
-      val pad: Byte = if (raw(0) < 0) -1 else 0
-      java.util.Arrays.fill(out, 0, width - raw.length, pad)
-      System.arraycopy(raw, 0, out, width - raw.length, raw.length)
-      out
-    }
-  }
-
-  /** Append field `i`'s non-null value from an [[InternalRow]] (or a
-    * positioned element of an ArrayData via the same SpecializedGetters
-    * surface) into a Group. */
-  private def primAppend(dt: DataType)
-      : (org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-         Int, Group, Int) => Unit = dt match {
-    case LongType    => (r, i, g, fi) => g.add(fi, r.getLong(i))
-    case IntegerType => (r, i, g, fi) => g.add(fi, r.getInt(i))
-    case ShortType   => (r, i, g, fi) => g.add(fi, r.getShort(i).toInt)
-    case ByteType    => (r, i, g, fi) => g.add(fi, r.getByte(i).toInt)
-    case DoubleType  => (r, i, g, fi) => g.add(fi, r.getDouble(i))
-    case FloatType   => (r, i, g, fi) => g.add(fi, r.getFloat(i))
-    case BooleanType => (r, i, g, fi) => g.add(fi, r.getBoolean(i))
-    case StringType  => (r, i, g, fi) =>
-      g.add(fi, Binary.fromConstantByteArray(r.getUTF8String(i).getBytes))
-    case DateType    => (r, i, g, fi) => g.add(fi, r.getInt(i))
-    case TimestampType | TimestampNTZType =>
-      (r, i, g, fi) => g.add(fi, r.getLong(i))
-    case d: DecimalType if d.precision <= 9 => (r, i, g, fi) =>
-      g.add(fi, r.getDecimal(i, d.precision, d.scale).toUnscaledLong.toInt)
-    case d: DecimalType if d.precision <= 18 => (r, i, g, fi) =>
-      g.add(fi, r.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-    case d: DecimalType =>
-      val width = minBytesForPrecision(d.precision)
-      (r, i, g, fi) => g.add(fi, Binary.fromConstantByteArray(
-        fixedDecimal(r.getDecimal(i, d.precision, d.scale), width)))
-    case other => throw new IllegalArgumentException(
-      s"unencodable type ${other.simpleString}")
-  }
-
-  def encoder(dt: DataType, i: Int): (InternalRow, Group) => Unit =
-    dt match {
-      case ArrayType(et, _) =>
-        val elem = primAppend(et)
-        (row, g) => {
-          val arr = row.getArray(i)
-          val listWrap = g.addGroup(i)
-          var j = 0
-          while (j < arr.numElements()) {
-            val entry = listWrap.addGroup(0)
-            if (!arr.isNullAt(j)) elem(arr, j, entry, 0)
-            j += 1
-          }
-        }
-      case _ =>
-        val app = primAppend(dt)
-        (row, g) => app(row, i, g, i)
-    }
 }

@@ -63,9 +63,9 @@ private[sources] trait SnapshotDv { this: SnapshotLog.type =>
     * row-per-position sidecars fold into bitmaps here. Empty map when
     * the version carries no DV. The collect is sidecar-bounded
     * (KBs/file), never data-bounded. */
-  private[sources] def dvBitmapsOf(spark: SparkSession, dir: String,
-      v: Long): Map[String, Array[Byte]] =
-    dvOf(spark, dir, v) match {
+  private[sources] def dvBitmaps(spark: SparkSession, dir: String,
+      m: Manifest): Map[String, Array[Byte]] =
+    m.dv match {
       case None => Map.empty
       case Some(name) =>
         val raw = dvRaw(spark, dir, name)

@@ -48,7 +48,7 @@ private[sources] trait SnapshotFeed { this: SnapshotLog.type =>
     * plans DSv2 relations through: version `v`'s surviving files via
     * Spark's native VECTORIZED parquet scan ([[readFiles]] — deletion
     * vector anti-applied, hive partition values re-attached), instead
-    * of the row-at-a-time Group reader the streaming feed uses. None
+    * of the DSv2 scan's one-file-per-partition rows. None
     * when the substitution does not apply (no committed versions, a
     * version the relation names that does not exist — let the v2 scan
     * surface its own error — or a declared-empty file list, which the

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 /** Manifest/header plumbing, schema + column mapping, table properties, change-file plumbing, write plumbing, LogStore seam — carved from the SnapshotLog monolith (round 15 split;
   * pure moves, object facade unchanged). Self-typed to the
   * [[SnapshotLog]] singleton so every member keeps resolving
@@ -321,23 +321,27 @@ private[sources] trait SnapshotMeta { this: SnapshotLog.type =>
     * keep their type (a silent type change would corrupt every older
     * file's read); added columns are nullable — older files lack them
     * and read as typed nulls. */
-  /** Same type up to NESTED nullability (array containsNull) — an
-    * `array<float>` built by `array(...)` (containsNull=false) must
-    * insert into a declared `array<float>` column (containsNull=true)
-    * and vice versa; element nullability widens, it never "changes the
-    * type". */
+  /** Same type up to NESTED nullability (array containsNull, map
+    * valueContainsNull, struct field nullability) — an `array<float>`
+    * built by `array(...)` (containsNull=false) must insert into a
+    * declared `array<float>` column (containsNull=true) and vice versa;
+    * nested nullability widens, it never "changes the type". */
   private[sources] def sameTypeIgnoreNull(a: DataType, b: DataType): Boolean =
-    (a, b) match {
-      case (ArrayType(ae, _), ArrayType(be, _)) =>
-        sameTypeIgnoreNull(ae, be)
-      case _ => a == b
-    }
+    org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .equalsIgnoreNullability(a, b)
 
   /** The union type: `a` with nested nullability widened by `b`'s. */
   private[sources] def widenNulls(a: DataType, b: DataType): DataType =
     (a, b) match {
       case (ArrayType(ae, an), ArrayType(be, bn)) =>
         ArrayType(widenNulls(ae, be), an || bn)
+      case (MapType(ak, av, an), MapType(bk, bv, bn)) =>
+        MapType(widenNulls(ak, bk), widenNulls(av, bv), an || bn)
+      case (StructType(af), StructType(bf)) =>
+        StructType(af.zip(bf).map { case (x, y) =>
+          x.copy(dataType = widenNulls(x.dataType, y.dataType),
+            nullable = x.nullable || y.nullable)
+        })
       case _ => a
     }
 

@@ -37,4 +37,9 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The session's UUID (`private[sql]` in Spark 4.x): a key that, unlike
+    * the session itself, no memoized plan pins ([[graft.Tables]]). */
+  def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 }

@@ -772,59 +772,47 @@ class GraftCatalogSpec extends AnyFunSuite with SparkFixture {
       s"expected the equality-ON refusal, got: ${rng.getMessage}")
   }
 
-  test("v2 streaming write: native InternalRow encode is content- AND " +
-      "file-layout-equivalent to the Group engine (round 12)") {
+  test("v2 streaming write: 14 column types read back equal by batch and stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val ddl = "(k BIGINT, i INT, s SMALLINT, b TINYINT, f FLOAT, " +
-      "x DOUBLE, bo BOOLEAN, v STRING, d DATE, ts TIMESTAMP, " +
-      "m9 DECIMAL(9,2), m18 DECIMAL(18,4), m28 DECIMAL(28,2), " +
-      "e ARRAY<FLOAT>)"
-    def writeVia(table: String, native: Boolean): String = {
-      spark.sql(s"CREATE TABLE g.gold.$table $ddl")
-      val ckpt = Files.createTempDirectory(s"enc-$table").toString
-      implicit val sqlCtx = spark.sqlContext
-      val ms = MemoryStream[Long]
-      spark.conf.set("spark.graft.streamWrite.nativeEncode",
-        native.toString)
-      val q = try ms.toDF().toDF("k").selectExpr("k",
-        "CAST(k AS INT) AS i", "CAST(k % 100 AS SMALLINT) AS s",
-        "CAST(k % 100 AS TINYINT) AS b", "CAST(k AS FLOAT) AS f",
-        "k / 7 AS x", "k % 2 = 0 AS bo", "concat('v', k) AS v",
-        "date_add(DATE'2024-01-01', CAST(k % 1000 AS INT)) AS d",
-        "timestamp_micros(k * 1000 + 123) AS ts",
-        "CAST(CAST(k AS DECIMAL(9,2)) / 3 AS DECIMAL(9,2)) AS m9",
-        "CAST(CAST(k AS DECIMAL(18,4)) / 7 AS DECIMAL(18,4)) AS m18",
-        "CAST(CAST(k AS DECIMAL(28,2)) / 3 AS DECIMAL(28,2)) AS m28",
-        "CASE WHEN k % 10 = 0 THEN NULL ELSE " +
-          "array(CAST(k AS FLOAT), NULL, CAST(-k AS FLOAT)) END AS e")
-        .writeStream.option("checkpointLocation", ckpt)
-        .toTable(s"g.gold.$table")
-      finally spark.conf.unset("spark.graft.streamWrite.nativeEncode")
-      try { ms.addData(0L until 2000L: _*); q.processAllAvailable() }
-      finally q.stop()
-      s"$root/gold/$table"
-    }
-    val groupDir = writeVia("encg", native = false)
-    val nativeDir = writeVia("encn", native = true)
-    // logical parity: both engines produce the same table
-    val g = SnapshotLog.read(spark, groupDir)
-    val n = SnapshotLog.read(spark, nativeDir)
-    assert(g.exceptAll(n).isEmpty && n.exceptAll(g).isEmpty,
-      "native-encoded rows diverged from the Group engine's")
-    assert(n.count() === 2000L)
-    // physical parity: identical parquet message types (so files from
-    // either engine interleave freely inside one table's history)
-    def footer(dir: String): String = {
-      val p = new org.apache.hadoop.fs.Path(
-        SnapshotLog.read(spark, dir).inputFiles.head)
-      org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        new org.apache.hadoop.conf.Configuration(), p,
-        org.apache.parquet.format.converter.ParquetMetadataConverter
-          .NO_FILTER).getFileMetaData.getSchema.toString
-    }
-    assert(footer(nativeDir) === footer(groupDir),
-      s"physical schemas diverged:\n${footer(nativeDir)}\nvs\n" +
-        footer(groupDir))
+    spark.sql("CREATE TABLE g.gold.enc (k BIGINT, i INT, s SMALLINT, " +
+      "b TINYINT, f FLOAT, x DOUBLE, bo BOOLEAN, v STRING, d DATE, " +
+      "ts TIMESTAMP, m9 DECIMAL(9,2), m18 DECIMAL(18,4), " +
+      "m28 DECIMAL(28,2), e ARRAY<FLOAT>)")
+    val ckpt = Files.createTempDirectory("enc").toString
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[Long]
+    val q = ms.toDF().toDF("k").selectExpr("k",
+      "CAST(k AS INT) AS i", "CAST(k % 100 AS SMALLINT) AS s",
+      "CAST(k % 100 AS TINYINT) AS b", "CAST(k AS FLOAT) AS f",
+      "k / 7 AS x", "k % 2 = 0 AS bo", "concat('v', k) AS v",
+      "date_add(DATE'2024-01-01', CAST(k % 1000 AS INT)) AS d",
+      "timestamp_micros(k * 1000 + 123) AS ts",
+      "CAST(CAST(k AS DECIMAL(9,2)) / 3 AS DECIMAL(9,2)) AS m9",
+      "CAST(CAST(k AS DECIMAL(18,4)) / 7 AS DECIMAL(18,4)) AS m18",
+      "CAST(CAST(k AS DECIMAL(28,2)) / 3 AS DECIMAL(28,2)) AS m28",
+      "CASE WHEN k % 10 = 0 THEN NULL ELSE " +
+        "array(CAST(k AS FLOAT), NULL, CAST(-k AS FLOAT)) END AS e")
+      .writeStream.option("checkpointLocation", ckpt)
+      .toTable("g.gold.enc")
+    try { ms.addData(0L until 2000L: _*); q.processAllAvailable() }
+    finally q.stop()
+    val batch = SnapshotLog.read(spark, s"$root/gold/enc")
+    val s2 = spark.readStream.table("g.gold.enc").writeStream
+      .format("memory").queryName("enc_stream")
+      .option("checkpointLocation", s"$ckpt/read")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try s2.awaitTermination(120000) finally s2.stop()
+    val streamed = spark.table("enc_stream")
+    assert(batch.count() === 2000L && streamed.count() === 2000L)
+    assert(batch.exceptAll(streamed).isEmpty &&
+      streamed.exceptAll(batch).isEmpty,
+      "the stream read diverged from the batch read")
+    // the written values themselves, not only the two reads' agreement
+    val r = batch.filter("k = 7").head()
+    assert(r.getInt(1) === 7 && r.getString(7) === "v7" &&
+      r.getDecimal(10) === new java.math.BigDecimal("2.33") &&
+      r.getSeq[java.lang.Float](13) === Seq(7.0f, null, -7.0f))
   }
 
   test("mixed-change ALTER is atomic: one statement = one version, " +
@@ -1108,7 +1096,7 @@ class GraftCatalogSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("the micro-batch stream fills file-missing columns from the " +
-      "frozen default (GroupFileReader parity with the batch scan)") {
+      "frozen default") {
     spark.sql("CREATE TABLE g.gold.defs (k BIGINT, v STRING)")
     spark.sql("INSERT INTO g.gold.defs VALUES (1, 'a'), (2, 'b')")
     spark.sql("ALTER TABLE g.gold.defs ADD COLUMN tag STRING " +
@@ -1126,6 +1114,36 @@ class GraftCatalogSpec extends AnyFunSuite with SparkFixture {
       .as[(Long, String)].collect().toSeq
     assert(got === Seq((1L, "legacy"), (2L, "legacy"), (3L, "fresh")),
       s"stream read must fill the frozen default; got $got")
+  }
+
+  test("MAP, STRUCT, BINARY and nested-ARRAY columns load, insert, " +
+      "select and stream") {
+    spark.sql("CREATE TABLE g.gold.nested (k BIGINT, m MAP<STRING, " +
+      "BIGINT>, st STRUCT<a: INT, b: STRING>, bin BINARY, " +
+      "aa ARRAY<ARRAY<DOUBLE>>)")
+    spark.sql("INSERT INTO g.gold.nested VALUES (1, map('a', 1L), " +
+      "named_struct('a', 1, 'b', 'x'), X'0102', " +
+      "array(array(1.0D, 2.0D), CAST(array() AS ARRAY<DOUBLE>))), " +
+      "(2, NULL, NULL, NULL, NULL)")
+    val batch = spark.sql("SELECT * FROM g.gold.nested ORDER BY k")
+      .collect().toSeq
+    assert(batch.map(_.getLong(0)) === Seq(1L, 2L))
+    val one = batch.head
+    assert(one.getMap[String, Long](1) === Map("a" -> 1L))
+    assert(one.getStruct(2).getInt(0) === 1 &&
+      one.getStruct(2).getString(1) === "x")
+    assert(one.getAs[Array[Byte]](3).toSeq === Seq[Byte](1, 2))
+    assert(one.getSeq[Seq[Double]](4) === Seq(Seq(1.0, 2.0), Seq.empty))
+    assert((1 to 4).forall(batch(1).isNullAt))
+    val out = Files.createTempDirectory("nestedstream").toString
+    val q = spark.readStream.table("g.gold.nested").writeStream
+      .format("memory").queryName("nested_stream")
+      .option("checkpointLocation", s"$out/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination(120000) finally q.stop()
+    assert(spark.sql("SELECT * FROM nested_stream ORDER BY k")
+      .collect().toSeq === batch)
   }
 
   test("COMMENT ON TABLE persists (DESCRIBE surfaces it, SHOW " +

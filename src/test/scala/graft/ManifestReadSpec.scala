@@ -114,4 +114,22 @@ class ManifestReadSpec extends AnyFunSuite with SparkFixture
     assert(history._1 === (1 to 5).map(v => s"v$v.manifest" -> 1).toMap,
       s"history: $history")
   }
+
+  test("an AvailableNow change-feed catch-up reads each version's manifest at most twice") {
+    val dir = table()
+    (1L to 12L).foreach(mergeBatch(dir, _)) // v3..v14
+    val ckpt = java.nio.file.Files.createTempDirectory("catchup").toString
+    val catchUp = counted {
+      val q = spark.readStream.format("graft-snapshot").option("path", dir)
+        .option("readChangeFeed", "true").option("startingVersion", "1")
+        .load().writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+    assert(catchUp._1.keySet === (1 to 14).map(v => s"v$v.manifest").toSet,
+      s"catch-up: $catchUp")
+    assert(catchUp._1.values.forall(_ <= 2), s"catch-up: $catchUp")
+  }
 }

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.plans.SnapshotBatchRead]] — batch SELECTs over snapshot/
   * catalog tables re-plan onto Spark's vectorized parquet file scan.
-  * Pins: plan shape (a real FileScan, no v2 Group scan left), row
-  * parity vs the Group engine under time travel / deletion vectors /
+  * Pins: plan shape (a real FileScan, no v2 scan left), row parity vs
+  * the table's own v2 scan under time travel / deletion vectors /
   * partition layouts, untouched DELETE FROM, and the wall-clock win on
   * a wide catch-up read. */
 class SnapshotBatchReadSpec extends AnyFunSuite with SparkFixture {
@@ -21,11 +21,13 @@ class SnapshotBatchReadSpec extends AnyFunSuite with SparkFixture {
   spark.conf.set("spark.sql.catalog.gv.root", root)
   spark.sql("CREATE NAMESPACE IF NOT EXISTS gv.ns")
 
-  /** Run `body` with the vectorized substitution OFF (Group scan). */
+  /** Run `body` with the substitution rule excluded, so batch reads
+    * plan the table's own v2 scan. */
   private def groupScan[A](body: => A): A = {
-    spark.conf.set("spark.graft.batchRead.vectorized", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      "graft.plans.SnapshotBatchRead")
     try body
-    finally spark.conf.set("spark.graft.batchRead.vectorized", "true")
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   private def planOf(df: DataFrame): String =
@@ -39,11 +41,11 @@ class SnapshotBatchReadSpec extends AnyFunSuite with SparkFixture {
     assert(planOf(vec).contains("FileScan parquet"),
       s"expected a native FileScan, got:\n${planOf(vec)}")
     assert(!planOf(vec).contains("BatchScan"),
-      "the v2 Group scan must be substituted away for batch reads")
+      "the v2 scan must be substituted away for batch reads")
     groupScan {
       val grp = spark.table("gv.ns.t")
       assert(planOf(grp).contains("BatchScan"),
-        s"kill switch must restore the v2 scan, got:\n${planOf(grp)}")
+        s"excluding the rule must restore the v2 scan, got:\n${planOf(grp)}")
       assert(vec.orderBy("k").collect().toSeq ===
         grp.orderBy("k").collect().toSeq)
     }

@@ -164,23 +164,53 @@ class SnapshotStreamSourceSpec extends AnyFunSuite with SparkFixture {
     } finally q.stop()
   }
 
-  test("unsupported column types are rejected at planning") {
-    // arrays of primitives stream since r10; nested arrays and maps
-    // stay out of scope — rejected LOUDLY at planning, never half-read
-    val cdir = freshDir()
-    SnapshotLog.commit(spark, cdir,
-      Seq((1L, Seq(Seq(1.0), Seq(2.0)))).toDF("k", "nested"))
-    val e2 = intercept[IllegalArgumentException] {
-      spark.readStream.format(Fmt).option("path", cdir).load()
-    }
-    assert(e2.getMessage.contains("streaming source supports"))
-    val mdir = freshDir()
-    SnapshotLog.commit(spark, mdir,
-      Seq((1L, Map("a" -> 1L))).toDF("k", "m"))
-    val e3 = intercept[IllegalArgumentException] {
-      spark.readStream.format(Fmt).option("path", mdir).load()
-    }
-    assert(e3.getMessage.contains("streaming source supports"))
+  test("NOT NULL and timestamp partition columns stream from typed constants") {
+    // hive files lack their partition columns: the reader reads them
+    // nullable and fills the manifest values, cast to the declared type
+    val dir = freshDir()
+    val df = spark.range(4).select(col("id").as("k"),
+      when(col("id") < 2, lit(0L)).otherwise(lit(1L)).as("p"),
+      lit(java.sql.Timestamp.valueOf("2024-05-01 10:30:00")).as("ts"))
+    assert(!df.schema("p").nullable)
+    SnapshotLog.commitPartitioned(spark, dir, df, Seq("p", "ts"))
+    val q = spark.readStream.format(Fmt).option("path", dir).load()
+      .writeStream.format("memory").queryName("snap_part_typed")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination(120000) finally q.stop()
+    val streamed = spark.table("snap_part_typed").orderBy("k").collect().toSeq
+    assert(streamed === SnapshotLog.read(spark, dir).orderBy("k").collect().toSeq)
+    assert(streamed.map(r => (r.getLong(0), r.getLong(1))) ===
+      Seq(0L -> 0L, 1L -> 0L, 2L -> 1L, 3L -> 1L))
+    assert(streamed.forall(_.getTimestamp(2) ===
+      java.sql.Timestamp.valueOf("2024-05-01 10:30:00")))
+  }
+
+  test("map, struct, binary and nested-array columns stream equal to the batch read") {
+    // the stream decodes through Spark's parquet reader, so its type
+    // coverage is the batch read's: nested values, nulls at every level
+    // and empty collections come through cell for cell
+    val dir = freshDir()
+    def frame(rs: (Long, Seq[Seq[Double]], Map[String, Long], (Int, String),
+        Array[Byte])*) = rs.toDF("k", "nested", "m", "st", "bin")
+    SnapshotLog.commit(spark, dir, frame(
+      (1L, Seq(Seq(1.0, 2.0), Seq.empty, null), Map("a" -> 1L, "b" -> 2L),
+        (7, "x"), Array[Byte](1, 2, 3)),
+      (2L, null, null, null, null)))
+    SnapshotLog.commitBatch(spark, dir, frame(
+      (3L, Seq(Seq(-0.5)), Map.empty, (8, null), Array.emptyByteArray)),
+      batchId = 1L)
+    val q = spark.readStream.format(Fmt).option("path", dir).load()
+      .writeStream.format("memory").queryName("snap_nested")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination(120000) finally q.stop()
+    val streamed = spark.table("snap_nested").orderBy("k").collect().toSeq
+    val batch = SnapshotLog.read(spark, dir).orderBy("k").collect().toSeq
+    assert(streamed.map(_.getLong(0)) === Seq(1L, 2L, 3L))
+    assert(streamed === batch)
+    assert(streamed.head.getMap[String, Long](2) === Map("a" -> 1L, "b" -> 2L))
+    assert(streamed.last.getAs[Array[Byte]](4).isEmpty)
   }
 
   test("array<float> embeddings stream bit-identically to the batch read") {
