@@ -80,10 +80,9 @@ object Pipeline {
       strict = cfg.strictSchema)
   }
 
-  /** One batch run. Returns the per-op counts (R8) — computed inside the
-    * merge from the cached classified frame, not by re-scanning the new
-    * snapshot (at 100 TB the old derivation was a full-table scan per
-    * merge). */
+  /** One batch run. Returns the per-op counts (R8) — observed inside the
+    * merge on its change-feed write, not by re-scanning the new snapshot
+    * (at 100 TB that derivation was a full-table scan per merge). */
   def run(spark: SparkSession, cfg: PipelineConfig,
           batchId: Long): Map[String, Long] =
     CdcStream.mergeBatch(readExtract(spark, cfg), batchId, cfg.cdc,

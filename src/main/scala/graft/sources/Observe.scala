@@ -7,8 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * action later drives it — an audit (row count, checksum, null tally)
   * that costs zero extra passes. At 100 TB the alternative is a second
   * full scan per audit; observe rides the pass the job already pays
-  * for, the same way the CDC merge derives its op counts from the
-  * cached classified frame instead of re-scanning.
+  * for, the same way the CDC merge observes its op counts on its
+  * change-feed write instead of re-scanning.
   *
   * Batch usage: `val t = Observe.tagged(df, "ingest", "rows" -> count(
   * lit(1)), "sum_qty" -> sum($"qty"))`, run any action on a frame built

@@ -1,20 +1,22 @@
 package graft.streaming
 
 import graft.cdc.{CdcConfig, CdcMerge, Hashing}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, when}
 
 /** Bucketed CDC state — the shuffle-free-merge design from SURVEY.md §4,
   * and (since round 3) the ONE state representation behind both the batch
   * pipeline and the streaming foreachBatch path ([[CdcStream]]).
   *
   * The current-state snapshot is persisted as a parquet table bucketed
-  * (and sorted) by `keyhash`, with the hash columns materialized. On the
-  * next merge, only the (much smaller) incoming extract is shuffled into
-  * the state's bucketing; Spark plans NO Exchange above the state scan —
-  * at 100 TB that removes a full shuffle+write-read of the big side from
-  * every incremental run. CdcBucketedSpec asserts the Exchange count on
-  * the physical plan.
+  * (and sorted) by `keyhash`, with the hash columns materialized. A merge
+  * rests on the identity apply∘classify == extract (CdcPropertySpec):
+  * for a full extract the next generation IS the hashed extract. So the
+  * extract is hashed once and written straight into the next
+  * generation's buckets (its one shuffle), and the change feed comes from
+  * a full-outer join of the old generation against the new one — both
+  * bucketed on `keyhash`, so Spark plans NO Exchange on either side, and
+  * nothing is cached (CdcBucketedSpec asserts the plan).
   *
   * Bucket count is a capacity decision: size so one bucket ≈ one HDFS/S3
   * object in the 100 MB–1 GB range at the target scale.
@@ -35,7 +37,14 @@ object CdcBucketed {
     * catalog forgets, the filesystem does not). With `location` the table
     * is EXTERNAL at that path (dropping a later generation keeps the
     * files — [[CdcStream]]'s versioned-snapshot retention relies on it);
-    * without, it is a managed table in the warehouse. */
+    * without, it is a managed table in the warehouse.
+    *
+    * Rows are repartitioned on `keyhash` into exactly the bucketing, so
+    * each task writes one file per bucket (without it every input task
+    * writes a file for every bucket). The write leaves NO parquet
+    * `_SUCCESS` marker: a generation is committed only once
+    * [[markCommitted]] runs, which lets [[CdcStream]] order its commit
+    * point after the change feed. */
   def writeState(snapshot: DataFrame, cfg: CdcConfig, table: String,
                  buckets: Int, useXxhash64: Boolean = true,
                  location: Option[String] = None): Unit = {
@@ -48,20 +57,35 @@ object CdcBucketed {
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
     val writer = CdcMerge.withHashes(snapshot, cfg, useXxhash64)
+      .repartition(buckets, col(CdcMerge.KeyHash))
       .write.mode("overwrite")
       .format("parquet")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .bucketBy(buckets, CdcMerge.KeyHash)
       .sortBy(CdcMerge.KeyHash)
     location.foreach(l => writer.option("path", l))
     writer.saveAsTable(table)
     // sidecar: the bucket count, so JVM-restart recovery re-registers the
     // generation with the spec its files were actually hashed with
-    val tableLoc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+    val tableLoc = tableLocation(spark, table)
     val out = tableLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .create(new org.apache.hadoop.fs.Path(tableLoc, BucketMetaFile), true)
     try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def tableLocation(spark: SparkSession,
+                            table: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+
+  /** Commit point of a generation written by [[writeState]]: create its
+    * `_SUCCESS` marker, the file restart recovery and point-in-time reads
+    * take as "fully written, and everything it vouches for exists". */
+  def markCommitted(spark: SparkSession, table: String): Unit = {
+    val loc = tableLocation(spark, table)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"), true).close()
   }
 
   /** Sidecar file (inside each generation dir) recording its bucket
@@ -205,37 +229,54 @@ object CdcBucketed {
       CdcMerge.withHashes(incoming, cfg, useXxhash64),
       cfg, withPriors)
 
-  /** One full merge cycle: classify, commit the next bucketed snapshot,
-    * return the I/U/D change feed.
+  /** One full merge cycle: write the extract as the next bucketed
+    * generation, classify the old generation against it, commit, and
+    * return what `persistFeed` returned for the I/U/D change feed.
     *
-    * `persistFeed` must MATERIALIZE the feed before it returns (the
-    * default localCheckpoint does; [[CdcStream]] writes it to the change
-    * log instead) — a lazy plan over the old table would recompute
-    * against dropped files after the swap. `onClassified` runs while the
-    * classified frame is cached (e.g. to collect per-op counts without a
-    * separate snapshot scan). `nextLocation` pins the new generation's
-    * files (external table); None keeps it managed. */
+    * Order: validate the config against the state (key evolution fails
+    * before anything is written), write the hashed extract to the
+    * `_stage` table, persist the feed of the shuffle-free old-vs-new
+    * join, and only then mark the stage committed and swap it in.
+    * `persistFeed` must MATERIALIZE the feed (the default localCheckpoint
+    * does; [[CdcStream]] writes it to the change log): that run is the
+    * one pass over the join, and a lazy plan over a managed old table
+    * would read dropped files after the swap. On the way the feed's rows
+    * fill `observation` (pass a fresh one per merge), so [[opCounts]]
+    * then holds the per-op counts, N included. `nextLocation` pins the
+    * new generation's files (external table); None keeps it managed. */
   def mergeIntoState(spark: SparkSession, table: String, incoming: DataFrame,
                      cfg: CdcConfig, batchId: Long, buckets: Int,
                      nextLocation: Option[String] = None,
                      persistFeed: DataFrame => DataFrame =
                        _.localCheckpoint(eager = true),
-                     onClassified: DataFrame => Unit = _ => (),
-                     withPriors: Boolean = false): DataFrame = {
+                     withPriors: Boolean = false,
+                     observation: Observation = Observation()): DataFrame = {
     recoverStage(spark, table)
-    val classified = classifyAgainstState(spark, table, incoming, cfg,
-      withPriors = withPriors).cache()
-    try {
-      onClassified(classified)
-      val feed = persistFeed(CdcMerge.changeFeed(classified, batchId))
-      val next = CdcMerge.applyChanges(classified, cfg)
-      // stage the new generation, then swap the table name atomically-ish:
-      // parquet bucketed tables cannot be overwritten while being read
-      val staging = s"${table}_stage"
-      writeState(next, cfg, staging, buckets, location = nextLocation)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-      feed
-    } finally classified.unpersist()
+    val prev = alignStateToConfig(spark.table(table), incoming, cfg)
+    // stage the new generation, then swap the table name atomically-ish:
+    // parquet bucketed tables cannot be overwritten while being read
+    val staging = s"${table}_stage"
+    writeState(incoming, cfg, staging, buckets, location = nextLocation)
+    val classified = CdcMerge.classifyHashed(prev, spark.table(staging), cfg,
+      withPriors)
+    val perOp = OpCodes.map(op =>
+      count(when(col(CdcMerge.OpCol) === op, true)).as(op))
+    val counted = classified.observe(observation, perOp.head, perOp.tail: _*)
+    val feed = persistFeed(CdcMerge.changeFeed(counted, batchId))
+    markCommitted(spark, staging)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
+    feed
   }
+
+  private val OpCodes = Seq(CdcMerge.Insert, CdcMerge.Update, CdcMerge.Delete,
+    CdcMerge.Unchanged)
+
+  /** Per-op row counts a [[mergeIntoState]] observed. As from a
+    * `groupBy(op)`, an op with no rows is absent — except N, which is
+    * always reported. Blocks until the merge's feed has been persisted. */
+  def opCounts(observation: Observation): Map[String, Long] =
+    observation.get.collect {
+      case (op, n: Long) if n > 0 || op == CdcMerge.Unchanged => op -> n
+    }
 }

@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.cdc.{CdcConfig, CdcMerge}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming CDC apply — the north-star pipeline (BASELINE.json
   * "Structured Streaming + CDC source connectors"; [upstream `cdc.py`]
@@ -26,13 +27,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * State layout under `stateDir`:
   *   bootstrap/    — empty initial generation (before the first batch)
-  *   v{batchId}/   — bucketed parquet snapshot after applying `batchId`
+  *   v{batchId}/   — bucketed parquet snapshot after applying `batchId`;
+  *                   its `_SUCCESS` is graft's commit point, created
+  *                   after batch `batchId`'s feed partition is written
+  *                   (parquet's own marker is switched off), so a
+  *                   marked generation always has its feed
   *   changes/      — change feed, PARTITIONED BY batch_id
   *
   * Idempotence/restart (foreachBatch is at-least-once):
   *   - the change feed is written with dynamic partition overwrite on
   *     batch_id — replaying a batch rewrites its own partition instead of
   *     appending duplicate I/U/D rows;
+  *   - a generation written but not yet marked (crash during or after
+  *     the feed write) is never adopted by restart recovery; the replay
+  *     rewrites it;
   *   - a replayed batch whose version is already committed is skipped
   *     outright (`currentVersion >= batchId`);
   *   - a crash mid-swap is healed by [[CdcBucketed.recoverStage]] on the
@@ -61,10 +69,11 @@ object CdcStream {
     * state table on restart while the committed generations remain on
     * disk — without this, the next merge would silently bootstrap EMPTY
     * state and misclassify every stored key. Re-register the newest
-    * FULLY WRITTEN generation (parquet `_SUCCESS` marker — a generation
-    * whose write was cut short never has one, so a half-written vN is
-    * never adopted). Adopting vN equals replaying batch N's catalog
-    * swap, which the replay guard + partitioned feed make idempotent. */
+    * COMMITTED generation (its `_SUCCESS` marker, created only after the
+    * generation and its feed partition are fully written — so a
+    * half-written vN, or one whose feed write failed, is never adopted).
+    * Adopting vN equals replaying batch N's catalog swap, which the
+    * replay guard + partitioned feed make idempotent. */
   private def recoverFromDisk(spark: SparkSession, stateDir: String): Unit = {
     val t = stateTable(stateDir)
     if (spark.catalog.tableExists(t) ||
@@ -112,26 +121,11 @@ object CdcStream {
     * overwrite on batch_id, so an at-least-once replay rewrites its own
     * partition instead of double-appending (and downstream reads of one
     * batch are partition-pruned). */
-  private def persistFeedPartitioned(spark: SparkSession, stateDir: String,
-                                     batchId: Long)(feed: DataFrame): DataFrame = {
+  private def persistFeedPartitioned(stateDir: String)(feed: DataFrame): Unit =
     feed.write.mode("overwrite")
       .partitionBy("batch_id")
       .option("partitionOverwriteMode", "dynamic")
       .parquet(changesPath(stateDir))
-    // normalize the read-back to the writer's schema: partition-column
-    // inference types batch_id as INT and moves it to the end, so a
-    // consumer unioning against a CdcMerge.changeFeed frame (batch_id
-    // LONG, writer order) would hit a type/order mismatch that depends
-    // on whether the directory happened to be empty
-    scala.util.Try(
-      spark.read.parquet(changesPath(stateDir))
-        .filter(col("batch_id") === batchId)
-        .select(feed.schema.fieldNames.toIndexedSeq.map(col): _*)
-        .withColumn("batch_id",
-          col("batch_id").cast(org.apache.spark.sql.types.LongType))
-    ).getOrElse( // empty feed on a fresh dir: nothing was written
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], feed.schema))
-  }
 
   /** Bootstrap an empty first generation so every merge takes the same
     * bucketed-state path (no special first-batch branch). */
@@ -142,8 +136,8 @@ object CdcStream {
         location = Some(bootstrapPath(stateDir)))
 
   /** Merge one micro-batch (a full extract) into the state dir. Returns
-    * the per-op row counts (R8) — derived from the cached classified
-    * frame, NOT from a re-scan of the snapshot.
+    * the per-op row counts (R8) — observed on the feed write itself
+    * ([[CdcBucketed.opCounts]]), NOT from a re-scan of the snapshot.
     *
     * With `logDir` set, the merged generation is ALSO committed as a
     * [[graft.sources.SnapshotLog]] version (see [[commitStateToLog]]):
@@ -176,18 +170,20 @@ object CdcStream {
       return replayedCounts(spark, stateDir, batchId)
     }
     ensureState(spark, table, batch, cfg, stateDir, buckets)
-    var ops = Map.empty[String, Long]
+    val observation = Observation()
     CdcBucketed.mergeIntoState(spark, table, batch, cfg, batchId, buckets,
       nextLocation = Some(versionPath(stateDir, batchId)),
-      persistFeed = persistFeedPartitioned(spark, stateDir, batchId),
-      onClassified = cl => ops = CdcMerge.counts(cl).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap,
-      withPriors = feedPriors)
-    logDir.foreach(commitStateToLog(spark, stateDir, _, batchId))
+      // the written partition is the feed's durable form; the returned
+      // frame is discarded below
+      persistFeed = feed => { persistFeedPartitioned(stateDir)(feed); feed },
+      withPriors = feedPriors, observation = observation)
+    // the schema just written, as the catalog recorded it: no inference
+    val written = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).schema
+    logDir.foreach(commitStateToLog(spark, stateDir, _, batchId, Some(written)))
     cowDir.foreach(applyFeedToCowLog(spark, stateDir, _, cfg,
       upTo = Some(batchId)))
-    if (ops.contains(CdcMerge.Unchanged)) ops
-    else ops + (CdcMerge.Unchanged -> 0L)
+    CdcBucketed.opCounts(observation)
   }
 
   // ---------------------------------------------------------------------
@@ -201,9 +197,12 @@ object CdcStream {
     * Returns the log version, or None when the generation is absent or
     * incomplete (pruned away, or its write never finished — never
     * commit a half-written generation). Idempotent via the log's
-    * `#batch=` guard: replays and heal-on-restart commits are no-ops. */
+    * `#batch=` guard: replays and heal-on-restart commits are no-ops.
+    * `written` is the generation's schema when the caller just wrote it;
+    * without it (replay and heal paths) the schema is read off the files. */
   def commitStateToLog(spark: SparkSession, stateDir: String,
-      logDir: String, batchId: Long): Option[Long] = {
+      logDir: String, batchId: Long,
+      written: Option[StructType] = None): Option[Long] = {
     val p = new Path(versionPath(stateDir, batchId))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(p, "_SUCCESS"))) return None
@@ -211,7 +210,7 @@ object CdcStream {
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).sorted
     if (files.isEmpty) return None // empty state: nothing to version yet
-    val schema = spark.read.parquet(p.toString).schema
+    val schema = written.getOrElse(spark.read.parquet(p.toString).schema)
     Some(graft.sources.SnapshotLog.commitBatchExternal(
       spark, logDir, files, schema, batchId))
   }
@@ -704,12 +703,13 @@ object CdcStream {
       .select(cfg.allCols.map(col): _*)
       .unionByName(upserts)
 
-    persistFeedPartitioned(spark, stateDir, batchId)(
+    persistFeedPartitioned(stateDir)(
       latest.select(cfg.allCols.map(col) :+ col(CdcMerge.OpCol): _*)
         .withColumn("batch_id", lit(batchId)))
     val staging = s"${table}_stage"
     CdcBucketed.writeState(next, cfg, staging, buckets,
       location = Some(versionPath(stateDir, batchId)))
+    CdcBucketed.markCommitted(spark, staging)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"ALTER TABLE $staging RENAME TO $table")
     logDir.foreach(commitStateToLog(spark, stateDir, _, batchId))

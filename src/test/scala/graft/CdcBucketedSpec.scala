@@ -38,6 +38,28 @@ class CdcBucketedSpec extends AnyFunSuite with SparkFixture {
       s"state scan is not bucket-aware:\n$plan")
   }
 
+  test("merge: the feed join reads both generations bucketed, with no Exchange") {
+    CdcBucketed.writeState(extract1, cfg, "state_feed_plan_test", buckets = 4)
+    var plan = ""
+    CdcBucketed.mergeIntoState(
+      spark, "state_feed_plan_test", extract2, cfg, batchId = 1L, buckets = 4,
+      persistFeed = { feed =>
+        val done = feed.localCheckpoint(eager = true)
+        plan = feed.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head
+        done
+      })
+    assert("Exchange hashpartitioning".r.findAllIn(plan).isEmpty,
+      s"the old-vs-new join must not shuffle:\n$plan")
+    assert("Bucketed: true".r.findAllIn(plan).size === 2,
+      s"both generations must be read bucket-aware:\n$plan")
+    // the extract was written as the next generation, one file per bucket
+    val loc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("state_feed_plan_test"))
+      .location)
+    assert(loc.list().count(_.startsWith("part-")) === 4)
+  }
+
   test("orphaned _stage from a mid-swap crash is adopted on the next entry") {
     // simulate: writeState committed the stage, the process died between
     // DROP TABLE and ALTER TABLE RENAME — only the stage exists. External

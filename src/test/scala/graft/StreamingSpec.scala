@@ -753,6 +753,138 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(ops === Map("U" -> 1L, "N" -> 0L))
   }
 
+  private val ordCfg = CdcConfig(Seq("o_orderkey"),
+    Seq("o_custkey", "o_orderstatus", "o_totalprice"))
+
+  test("a merge whose feed write fails leaves its generation uncommitted; restart replays it") {
+    import spark.implicits._
+    val stateDir = Files.createTempDirectory("crash_order").toString
+    val b0 = Seq(Ord(1, 10, "O", 100.0), Ord(2, 20, "O", 200.0)).toDF
+    val b1 = Seq(Ord(1, 10, "O", 100.0), Ord(2, 20, "F", 250.0)).toDF
+    val b2 = Seq(Ord(1, 10, "O", 100.0), Ord(3, 30, "O", 300.0)).toDF
+    CdcStream.mergeBatch(b0, 0, ordCfg, stateDir)
+    CdcStream.mergeBatch(b1, 1, ordCfg, stateDir)
+    // b2's feed write fails: its directory's path is now a regular file
+    val changes = new java.io.File(CdcStream.changesPath(stateDir))
+    val aside = new java.io.File(s"$stateDir/changes_aside")
+    assert(changes.renameTo(aside) && changes.createNewFile())
+    val e = intercept[Exception](CdcStream.mergeBatch(b2, 2, ordCfg, stateDir))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[org.apache.hadoop.fs.ParentNotDirectoryException]),
+      s"expected the feed write to fail, got $e")
+    // restart: the catalog forgets the live and stage tables; the feed
+    // directory comes back
+    val t = CdcStream.stateTable(stateDir)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"DROP TABLE IF EXISTS ${t}_stage")
+    assert(changes.delete() && aside.renameTo(changes))
+    // v2 holds a fully written state but no feed: it must not be adopted
+    assert(CdcStream.currentVersion(spark, stateDir) === Some(1L))
+    assert(CdcStream.mergeBatch(b2, 2, ordCfg, stateDir) ===
+      Map("I" -> 1L, "D" -> 1L, "N" -> 1L))
+    assert(spark.read.parquet(s"${CdcStream.changesPath(stateDir)}/batch_id=2")
+      .count() === 2)
+  }
+
+  test("a steady mergeBatch runs at most 3 Spark jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val stateDir = Files.createTempDirectory("merge_jobs").toString
+    val logDir = Some(Files.createTempDirectory("merge_jobs_log").toString)
+    CdcStream.mergeBatch(Seq(Ord(1, 10, "O", 100.0), Ord(2, 20, "O", 200.0))
+      .toDF, 0, ordCfg, stateDir, logDir = logDir)
+    CdcStream.mergeBatch(Seq(Ord(1, 10, "F", 110.0), Ord(2, 20, "O", 200.0),
+      Ord(3, 30, "O", 300.0)).toDF, 1, ordCfg, stateDir, logDir = logDir)
+    val merge = s"steady-merge-$stateDir"
+    val sentinel = s"steady-merge-sentinel-$stateDir"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`merge`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val ops = try {
+      spark.sparkContext.setJobGroup(merge, "steady merge")
+      val ops = CdcStream.mergeBatch(Seq(Ord(1, 10, "F", 110.0),
+        Ord(3, 30, "F", 330.0), Ord(4, 40, "O", 400.0)).toDF, 2, ordCfg,
+        stateDir, logDir = logDir)
+      // listener events arrive in order: the sentinel job's start means
+      // every job of the merge has been seen
+      spark.sparkContext.setJobGroup(sentinel, "drain")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(drained.await(2, java.util.concurrent.TimeUnit.MINUTES))
+      ops
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    info(s"${jobs.get} jobs")
+    assert(ops === Map("I" -> 1L, "U" -> 1L, "D" -> 1L, "N" -> 1L))
+    assert(jobs.get <= 3, s"a steady merge ran ${jobs.get} jobs")
+  }
+
+  test("an empty extract merges promptly: N=0 on bootstrap state, all D on populated state") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val stateDir = Files.createTempDirectory("merge_empty").toString
+    val empty = Seq.empty[Ord].toDF
+    def merge(df: org.apache.spark.sql.DataFrame, b: Long) = Await.result(
+      Future(CdcStream.mergeBatch(df, b, ordCfg, stateDir))(
+        ExecutionContext.global), 2.minutes)
+    assert(merge(empty, 0) === Map("N" -> 0L))
+    assert(merge(Seq(Ord(1, 10, "O", 100.0), Ord(2, 20, "O", 200.0)).toDF, 1) ===
+      Map("I" -> 2L, "N" -> 0L))
+    assert(merge(empty, 2) === Map("D" -> 2L, "N" -> 0L))
+    assert(CdcStream.currentState(spark, stateDir).get.count() === 0L)
+    assert(spark.read.parquet(s"${CdcStream.changesPath(stateDir)}/batch_id=2")
+      .count() === 2)
+  }
+
+  test("feedPriors: the persisted feed equals the classify feed, __old_ columns included") {
+    import spark.implicits._
+    val stateDir = Files.createTempDirectory("merge_priors").toString
+    val prev = Seq(Ord(1, 10, "O", 100.0), Ord(2, 20, "O", 200.0),
+      Ord(3, 30, "O", 300.0)).toDF
+    val curr = Seq(Ord(1, 10, "O", 100.0), Ord(2, 20, "F", 250.0),
+      Ord(4, 40, "O", 400.0)).toDF
+    CdcStream.mergeBatch(prev, 0, ordCfg, stateDir, feedPriors = true)
+    CdcStream.mergeBatch(curr, 1, ordCfg, stateDir, feedPriors = true)
+    // CdcMerge.classify with the prior images switched on
+    val expected = CdcMerge.changeFeed(CdcMerge.classifyHashed(
+      CdcMerge.withHashes(prev, ordCfg, useXxhash64 = true),
+      CdcMerge.withHashes(curr, ordCfg, useXxhash64 = true), ordCfg,
+      withPriors = true), 1L)
+    val part = spark.read.parquet(s"${CdcStream.changesPath(stateDir)}/batch_id=1")
+    assert(part.columns.toSeq === expected.columns.toSeq.filterNot(_ == "batch_id"))
+    val got = part.withColumn("batch_id", lit(1L))
+    assert(got.count() === 3)
+    assert(got.exceptAll(expected).count() === 0)
+    assert(expected.exceptAll(got).count() === 0)
+  }
+
+  test("the log commit records the written schema without inferring it") {
+    import spark.implicits._
+    val stateDir = Files.createTempDirectory("merge_schema").toString
+    val logDir = Files.createTempDirectory("merge_schema_log").toString
+    CdcStream.mergeBatch(Seq(Ord(1, 10, "O", 100.0)).toDF, 0, ordCfg, stateDir,
+      logDir = Some(logDir))
+    CdcStream.mergeBatch(Seq(Ord(1, 10, "F", 110.0), Ord(2, 20, "O", 200.0))
+      .toDF, 1, ordCfg, stateDir, logDir = Some(logDir))
+    for (b <- Seq(0L, 1L)) {
+      val v = graft.sources.SnapshotLog.versionOfBatch(spark, logDir, b).get
+      val onDisk = spark.read.parquet(CdcStream.versionPath(stateDir, b)).schema
+      assert(graft.sources.SnapshotLog.schemaOf(spark, logDir, v) === Some(onDisk))
+      assert(onDisk(CdcMerge.KeyHash).metadata.getString(CdcMerge.KeyColsMeta) ===
+        "o_orderkey")
+    }
+  }
+
   test("time travel + SCD2: versioned snapshots read back; feed folds to validity ranges") {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("tt_state").toString
